@@ -44,12 +44,22 @@ _TABLE_CACHE: dict = {}
 
 
 def _path_stamp(path: str) -> tuple:
-    """(mtime_ns, size) of a parquet file or directory-of-parts."""
+    """(mtime_ns, size) of a parquet file or directory-of-parts.
+
+    A part file rewritten in place leaves its directory's mtime alone, so
+    a directory's stamp also carries the newest part's (mtime_ns, size).
+    """
     try:
         st = os.stat(path)
         if os.path.isdir(path):
-            parts = sorted(os.listdir(path))
-            return (st.st_mtime_ns, len(parts), parts[-1] if parts else "")
+            with os.scandir(path) as it:
+                parts = {e.name: e.stat() for e in it}
+            newest = max(
+                ((p.st_mtime_ns, p.st_size) for p in parts.values()),
+                default=(),
+            )
+            last = max(parts, default="")
+            return (st.st_mtime_ns, len(parts), last, newest)
         return (st.st_mtime_ns, st.st_size)
     except OSError:
         return ("missing",)

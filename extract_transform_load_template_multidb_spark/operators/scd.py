@@ -47,10 +47,14 @@ def scd2_from_history(
             1,
         ).otherwise(0),
     )
+    # Peer-inclusive (RANGE) frame: identical (key, ts, attr) rows carry
+    # __chg 1 and 0 in whatever order the sort leaves them, so a ROWS
+    # frame could put one copy in the previous run; RANGE gives every
+    # peer the same run id.
     runs = flagged.withColumn(
         "__run",
         F.sum("__chg").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
     per_run = runs.groupBy(key_col, "__run").agg(

@@ -15,105 +15,12 @@ regardless of partitioning.
 
 from __future__ import annotations
 
-import functools
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
-
-# ---------------------------------------------------------------------------
-# Adaptive-execution bypass for provably-small, non-explosive plans
-# (round-12: the 526-query tail is driver-latency bound — 8-vs-32-core
-# sweep totals within 2%). AQE materializes every shuffle as its own job
-# and re-optimizes between stages; that orchestration is pure overhead
-# when the whole input is smaller than one advisory partition per core
-# AND the plan cannot blow the data up past its input size. Measured at
-# sf0.1 (tools/aqe_tail_ab.py): 24-query tail sample 11.10 s -> 8.68 s
-# (jobs 92 -> 42) with AQE off; but the EXPLOSIVE family (banding
-# explodes, self-join wedges) regressed 2-5x without AQE's runtime
-# join-strategy conversion and coalescing (dedup_clusters_minhash
-# 7.3 -> 19.8 s). Hence the gate is structural, not size-only — bypass
-# only when, on the ANALYZED plan (no extra optimizer pass):
-#   * every leaf is a relation with real statistics (an unknown-size
-#     leaf — localCheckpoint RDD, createDataFrame — might be huge);
-#   * the leaves sum to < cores x AQE's advisory partition size (at
-#     cluster scale real inputs exceed this and AQE stays on);
-#   * no Generate (explode) node — row multiplication breaks the
-#     "output work ~ input size" premise;
-#   * no leaf relation appears twice (self-join/self-union shapes are
-#     the other way tiny inputs become huge intermediates).
-# Results are identical either way — AQE is a performance feature — and
-# every query sets the conf explicitly, so nothing leaks across queries.
-# ---------------------------------------------------------------------------
-
-_EXPR_ID = re.compile(r"#\d+")
-
-
-def _aqe_bypass_ok(df: DataFrame) -> bool:
-    spark = df.sparkSession
-    from extract_transform_load_template_multidb_spark.operators.dedup import (
-        _ADVISORY_BYTES,
-        _fan_out,  # noqa: F401  (shares the advisory-bytes cache)
-    )
-
-    qe = df._jdf.queryExecution()
-    plan = qe.analyzed()
-    if "Generate " in plan.toString():
-        return False
-    leaves = plan.collectLeaves()
-    total = 0
-    seen: set[str] = set()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        sig = _EXPR_ID.sub("#", leaf.toString())
-        if sig in seen:
-            return False
-        seen.add(sig)
-        size = int(str(leaf.stats().sizeInBytes()))
-        if size >= (1 << 62):  # unknown-size default: might be huge
-            return False
-        total += size
-    advisory = _ADVISORY_BYTES.get(id(spark))
-    if advisory is None:
-        advisory = 64 * 1024 * 1024
-        try:
-            advisory = int(
-                spark._jvm.org.apache.spark.network.util.JavaUtils
-                .byteStringAsBytes(
-                    spark.conf.get(
-                        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                        "64m",
-                    )
-                )
-            )
-        except Exception:
-            pass
-        _ADVISORY_BYTES[id(spark)] = advisory
-    cores = spark.sparkContext.defaultParallelism
-    return total < cores * advisory
-
-
-def _adaptive_gate(fn: Callable) -> Callable:
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Builders with internal actions (iterative graph loops, eager
-        # checkpoints) always run under the session default: AQE on.
-        try:
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-        except Exception:
-            return fn(spark, sf_dir)
-        df = fn(spark, sf_dir)
-        try:
-            if _aqe_bypass_ok(df):
-                spark.conf.set("spark.sql.adaptive.enabled", "false")
-        except Exception:
-            pass  # keep AQE on — never fail or mis-gate a query build
-        return df
-
-    return wrapped
 
 
 def query(name: str, oracle: str | None = None):
@@ -131,10 +38,7 @@ def query(name: str, oracle: str | None = None):
                 f"(existing: {QUERIES[name].__module__}, "
                 f"new: {fn.__module__})"
             )
-        # Registered under the adaptive-execution gate (see above); the
-        # undecorated builder is returned so module-level callers and
-        # tests that import the function directly see the plain query.
-        QUERIES[name] = _adaptive_gate(fn)
+        QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

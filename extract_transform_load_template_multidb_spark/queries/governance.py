@@ -34,7 +34,7 @@ runs AS (
     SELECT o_custkey, o_orderpriority, o_orderdate,
            SUM(chg) OVER (PARTITION BY o_custkey
                           ORDER BY o_orderdate, o_orderpriority
-                          ROWS UNBOUNDED PRECEDING) AS run
+                          RANGE UNBOUNDED PRECEDING) AS run
     FROM flagged
 ),
 per_run AS (
@@ -81,7 +81,7 @@ runs AS (
     SELECT o_custkey, o_orderpriority, o_orderdate,
            SUM(chg) OVER (PARTITION BY o_custkey
                           ORDER BY o_orderdate, o_orderpriority
-                          ROWS UNBOUNDED PRECEDING) AS run
+                          RANGE UNBOUNDED PRECEDING) AS run
     FROM flagged
 ),
 per_run AS (
@@ -2764,7 +2764,7 @@ runs AS (
     SELECT o_custkey, o_orderpriority, o_orderdate,
            SUM(chg) OVER (PARTITION BY o_custkey
                           ORDER BY o_orderdate, o_orderpriority
-                          ROWS UNBOUNDED PRECEDING) AS run
+                          RANGE UNBOUNDED PRECEDING) AS run
     FROM flagged
 ),
 hist AS (

@@ -2788,18 +2788,9 @@ SELECT CAST((SELECT count(*) FROM exact) AS BIGINT) AS n_exact,
 )
 
 
-@query("dedup_lsh_recall_audit", oracle=_LSH_RECALL_ORACLE)
-def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measure, don't guess: the MinHash/LSH path's RECALL against the
-    exhaustive inverted-index ground truth at the same Jaccard-≥0.5
-    definition (precision is 1.0 by construction — candidates are
-    exact-verified). One summary row: exact-pair count, banded-path
-    count, missed pairs (anti-join consistency check), recall. This is
-    the calibration run a 100 TB dedup does on a sample BEFORE trusting
-    banding parameters (num_perm/rows_per_band) corpus-wide; the
-    exhaustive side stays sample-sized, the banded side is the
-    production plan."""
-    docs = load_table(spark, sf_dir, "documents")
+def _recall_audit_pairs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(exact, found) (id_a, id_b) pair sets of :func:`dedup_lsh_recall_audit`:
+    the exhaustive Jaccard-≥0.5 ground truth and the MinHash/LSH path."""
     # The exact side runs strategy="allpairs" (round-11 optimization):
     # unigram shingles over this corpus's bounded vocabulary make every
     # posting list ~corpus-sized, so the inverted-index join degenerated
@@ -2814,6 +2805,22 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     found = dd.near_dup_pairs(
         docs, num_perm=8, rows_per_band=2, threshold=0.5
     ).select("id_a", "id_b")
+    return exact, found
+
+
+@query("dedup_lsh_recall_audit", oracle=_LSH_RECALL_ORACLE)
+def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Measure, don't guess: the MinHash/LSH path's RECALL against the
+    exhaustive inverted-index ground truth at the same Jaccard-≥0.5
+    definition (precision is 1.0 by construction — candidates are
+    exact-verified). One summary row: exact-pair count, banded-path
+    count, missed pairs (anti-join consistency check), recall. This is
+    the calibration run a 100 TB dedup does on a sample BEFORE trusting
+    banding parameters (num_perm/rows_per_band) corpus-wide; the
+    exhaustive side stays sample-sized, the banded side is the
+    production plan."""
+    docs = load_table(spark, sf_dir, "documents")
+    exact, found = _recall_audit_pairs(docs)
     # Round-12: n_missed = n_exact − n_found, NOT an anti-join. The two
     # ~8.5-8.9M-row pair sets were sort-merge-joined (the round's largest
     # remaining exchange) to count |exact \ found| — but found ⊆ exact
@@ -2831,15 +2838,24 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     via least/greatest) and emit each doc pair exactly once.
     # The anti-join arm double-referenced both pair pipelines; dropping
     # it removes the SMJ and one ReusedExchange consumer from each side.
-    # A violation of the subset invariant (an operator bug) would surface
-    # as a negative n_missed — louder than the old silent anti-join, and
-    # still oracle-checked against DuckDB's NOT EXISTS count.
+    # A violation of the subset invariant (an operator bug) that leaves
+    # n_missed negative fails the query; the rest stays oracle-checked
+    # against DuckDB's NOT EXISTS count, and
+    # tests/test_r12_optimizations.py compares n_missed with the
+    # anti-join at sf0.001.
     ne = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     nf = found.agg(F.count(F.lit(1)).alias("n_found"))
+    n_missed = F.col("n_exact") - F.col("n_found")
     return ne.crossJoin(nf).select(
         "n_exact",
         "n_found",
-        (F.col("n_exact") - F.col("n_found")).alias("n_missed"),
+        F.when(n_missed >= 0, n_missed)
+        .otherwise(
+            F.raise_error(
+                F.lit("recall audit: found pairs are not a subset of exact")
+            )
+        )
+        .alias("n_missed"),
         (
             F.col("n_found").cast("double")
             / F.col("n_exact").cast("double")
@@ -8687,43 +8703,13 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     from pyspark.sql import Window as Win
 
-    edges_pre = (
+    edges = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .groupBy(
             F.col("o_custkey").alias("c"),
             F.col("l_suppkey").alias("s"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
-    )
-    # Round-12: the 8 half-steps run ~25 tiny jobs through the eager
-    # checkpoints below, and AQE turns each aggregation into its own
-    # materialized stage + re-plan — measured 4.64 -> 3.05 s at sf0.1
-    # with adaptive off (tools/aqe_tail_ab.py). The bypass is gated on
-    # the same small-input structural test the registry gate uses
-    # (distinct file leaves summing under cores x advisory bytes), so a
-    # cluster-scale lineitem keeps AQE for the edge aggregation; the
-    # terminal frame is checkpoint-rooted, so the registry gate restores
-    # AQE for the final count either way.
-    from extract_transform_load_template_multidb_spark.queries import (
-        _aqe_bypass_ok,
-    )
-
-    try:
-        bypass = _aqe_bypass_ok(edges_pre)
-    except Exception:
-        bypass = False
-    if bypass:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return _hits_body(spark, edges_pre, Win)
-    finally:
-        if bypass:
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-
-def _hits_body(spark: SparkSession, edges_pre: DataFrame, Win) -> DataFrame:
-    edges = (
-        edges_pre
         # 8 half-steps re-scan this cached frame; coalesce so each tiny
         # broadcast-join job schedules 8 tasks, not shuffle_partitions —
         # per-task overhead dominates node-count-sized iterative work.

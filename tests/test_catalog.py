@@ -33,3 +33,24 @@ def test_all_tables_load(spark, sf_dir):
     for name in TABLES:
         df = load_table(spark, sf_dir, name)
         assert len(df.schema.fields) > 0, name
+
+
+def test_load_table_sees_part_file_rewritten_in_place(spark, tmp_path):
+    """Overwriting a directory table's part file under the same name leaves
+    the directory's mtime unchanged; the handle memo must still notice."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "t.parquet" / "part-00000.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"x": list(range(10))}), part)
+    first = load_table(spark, str(tmp_path), "t")
+    assert first.count() == 10
+
+    # Other rows and a new column: a stale handle keeps the old schema.
+    pq.write_table(
+        pa.table({"x": list(range(100, 125)), "y": ["n"] * 25}), part
+    )
+    again = load_table(spark, str(tmp_path), "t")
+    assert again.columns == ["x", "y"]
+    assert sorted(r["x"] for r in again.collect()) == list(range(100, 125))

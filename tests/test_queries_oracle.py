@@ -26,16 +26,55 @@ def duck(sf_dir):
     con.close()
 
 
+def _assert_conf_unchanged(spark, before: dict, when: str) -> None:
+    """Building or running a query must leave session conf as it found
+    it: the session is shared with the caller's other jobs."""
+    after = spark.conf.getAll
+    changed = {
+        k: (before.get(k), after.get(k))
+        for k in before.keys() | after.keys()
+        if before.get(k) != after.get(k)
+    }
+    assert not changed, f"session conf changed {when}: {changed}"
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(name, spark, sf_dir, duck):
+    before = spark.conf.getAll
     df = QUERIES[name](spark, sf_dir)
+    _assert_conf_unchanged(spark, before, "by the build")
     compare(df, duck, ORACLES[name])
+    _assert_conf_unchanged(spark, before, "by the action")
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
 def test_query_runs_rows_only(name, spark, sf_dir):
+    before = spark.conf.getAll
     df = QUERIES[name](spark, sf_dir)
+    _assert_conf_unchanged(spark, before, "by the build")
     assert df.count() >= 0
+    _assert_conf_unchanged(spark, before, "by the action")
+
+
+def test_two_threads_share_one_session(spark, sf_dir, duck):
+    """Two threads run different oracle queries on one session, three
+    times each; every result must stay hash-green."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def run(name):
+        con = duck.cursor()  # a DuckDB connection is not thread-safe
+        try:
+            for _ in range(3):
+                compare(QUERIES[name](spark, sf_dir), con, ORACLES[name])
+        finally:
+            con.close()
+
+    before = spark.conf.getAll
+    names = ["q1_pricing_summary", "q3_shipping_priority"]
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for fut in [pool.submit(run, n) for n in names]:
+            fut.result(timeout=900)
+    _assert_conf_unchanged(spark, before, "by the threads")
 
 
 def test_ohlc_rollup_tiebreak_and_nonfinite(spark):

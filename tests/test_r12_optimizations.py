@@ -9,7 +9,9 @@ Covers the operator-internal changes of the round:
   * the banded paths raise on non-divisible num_perm/rows_per_band
     instead of silently dropping trailing signature rows;
   * banded_unique_pairs keeps its exactly-once guarantee when band
-    hashes are NULL (null-safe staleness).
+    hashes are NULL (null-safe staleness);
+  * the recall audit's n_missed subtraction equals the anti-join it
+    replaced.
 """
 
 from __future__ import annotations
@@ -128,3 +130,20 @@ def test_banded_unique_pairs_null_band_hashes_exactly_once(spark):
         for r in dd.banded_unique_pairs(bands_all, n_bands=2).collect()
     )
     assert got == [(1, 2), (1, 3), (2, 3)]
+
+
+def test_recall_audit_n_missed_equals_anti_join(spark, sf_dir):
+    """n_missed is computed as n_exact - n_found on the premise that
+    found ⊆ exact; the set difference it replaced must agree with it."""
+    from extract_transform_load_template_multidb_spark.catalog import (
+        load_table,
+    )
+    from extract_transform_load_template_multidb_spark.queries import llm_data
+
+    exact, found = llm_data._recall_audit_pairs(
+        load_table(spark, sf_dir, "documents")
+    )
+    anti = exact.join(found, ["id_a", "id_b"], "left_anti").count()
+    row = llm_data.dedup_lsh_recall_audit(spark, sf_dir).first()
+    assert row["n_missed"] == anti
+    assert found.join(exact, ["id_a", "id_b"], "left_anti").count() == 0

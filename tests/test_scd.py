@@ -25,6 +25,7 @@ def test_scd2_from_history_runs_and_intervals(spark):
             (1, "A", D(2024, 1, 1)),
             (1, "A", D(2024, 1, 5)),
             (1, "B", D(2024, 2, 1)),
+            (1, "B", D(2024, 2, 1)),  # duplicate row: same run, no split
             (1, "A", D(2024, 3, 1)),  # value returns → NEW run, not merged
             (2, "X", D(2024, 1, 1)),
         ],
