@@ -87,7 +87,7 @@ def _build_transform(spec: dict) -> Callable[[DataFrame], DataFrame]:
     return _TRANSFORMS[op](**spec)
 
 
-def _build_sink(spec: dict) -> Callable[[DataFrame], None]:
+def _build_sink(spec: dict) -> Callable[[DataFrame], int | None]:
     spec = dict(spec)
     kind = spec.pop("type", None)
     if kind == "parquet":

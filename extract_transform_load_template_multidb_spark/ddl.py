@@ -196,11 +196,6 @@ def nvarchar_promotions(
     return {c for c in str_cols if flags[c] == 1}
 
 
-def introspect_parquet(spark: SparkSession, path: str) -> StructType:
-    """Catalog introspection for file tables: schema without a data scan."""
-    return spark.read.parquet(path).schema
-
-
 def introspect_jdbc_information_schema(
     spark: SparkSession, jdbc_opts: dict[str, str], table: str, db_schema: str = None
 ) -> DataFrame:

@@ -52,18 +52,6 @@ def _chunk(tag: bytes, data: bytes) -> bytes:
     )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """PaethPredictor (spec §9.4): nearest of a/b/c to a+b-c, ties
-    breaking left → above → above-left."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def encode_png(
     img: "np.ndarray", filters: tuple[int, ...] | None = None
 ) -> bytes:

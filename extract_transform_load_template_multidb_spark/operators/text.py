@@ -91,12 +91,6 @@ def quality_features(
     )
 
 
-def lang_lexicon_df(spark) -> DataFrame:
-    """The language-ID lexicon as a (lang, word) DataFrame (broadcast-size)."""
-    rows = [(lang, w) for lang in _LANGS for w in LANG_LEXICON[lang]]
-    return spark.createDataFrame(rows, "lang_cand string, w string")
-
-
 def _collapse_by_text(df: DataFrame, text_col: str, id_col: str):
     """(groups, reps): exact-duplicate collapse for per-doc operators that
     are pure functions of the text — run the expensive stage on one rep

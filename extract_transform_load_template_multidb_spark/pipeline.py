@@ -4,8 +4,11 @@ The reference splits extract/transform/load into Airflow tasks that ship the
 whole dataset through XCom pickles (``Template-to-MySQL/
 BigQuery-to-MySQL-Method-1.py:67``); here a pipeline is ONE lazy DataFrame
 plan — source → transforms → sink — with retry and notification hooks around
-the single action. Scheduling stays external (cron/Airflow submitting
-``spark-submit``), matching C1's ``@daily``.
+the single action. The loaded record count (C5) is observed on that action:
+the sink counts its own rows, or writes through a Dataset action that carries
+an ``Observation``, so nothing is cached and nothing is scanned twice.
+Scheduling stays external (cron/Airflow submitting ``spark-submit``),
+matching C1's ``@daily``.
 """
 
 from __future__ import annotations
@@ -17,9 +20,14 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from email.mime.text import MIMEText
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 log = logging.getLogger(__name__)
+
+# How long ``Pipeline.run`` waits for a sink's row-count observation after
+# the sink returns. The listener that completes it runs asynchronously, a few
+# ms after the write; one that has not fired by then never will.
+_OBSERVATION_WAIT_S = 10.0
 
 
 def smtp_sender(
@@ -87,17 +95,25 @@ class Pipeline:
 
     - ``source``:     (spark) -> DataFrame  (lazy scan)
     - ``transforms``: list of DataFrame -> DataFrame
-    - ``sink``:       (DataFrame) -> None   (the single action)
+    - ``sink``:       (DataFrame) -> int | None  (the single action)
     - ``retries``/``retry_delay``: reference C1 default_args
       (1 retry / 5 min, ``BigQuery-to-MySQL-Method-1.py:17-18``; tests use
       a tiny delay).
 
-    Returns the loaded record count (C5 — the reference's only metric).
+    Returns the loaded record count (C5 — the reference's only metric),
+    taken from the sink's own action. Each attempt hands the sink a frame
+    observed with a fresh ``Observation`` counting its rows. A sink that
+    returns an ``int`` has counted its rows itself, and that count is used
+    (``JdbcUpsertWriter.write`` does: its RDD action fires no observation).
+    A sink that returns ``None`` must write through a Dataset action
+    (``df.write...``), whose observation supplies the count; its first
+    Dataset action over the frame is the one counted. A ``None`` sink whose
+    observation never fires fails the attempt with a ``RuntimeError``.
     """
 
     name: str
     source: Callable[[SparkSession], DataFrame]
-    sink: Callable[[DataFrame], None]
+    sink: Callable[[DataFrame], int | None]
     transforms: list[Callable[[DataFrame], DataFrame]] = field(default_factory=list)
     notifier: Notifier = field(default_factory=Notifier)
     retries: int = 1
@@ -114,16 +130,11 @@ class Pipeline:
         attempt = 0
         while True:
             try:
-                df = self.build(spark)
-                # Count and load from one cached plan so the notified metric
-                # matches what was written (the reference counts the same
-                # in-memory frame it loads).
-                df = df.cache()
-                try:
-                    n = df.count()
-                    self.sink(df)
-                finally:
-                    df.unpersist()
+                obs = Observation()
+                df = self.build(spark).observe(obs, F.count(F.lit(1)).alias("rows"))
+                n = self.sink(df)
+                if n is None:
+                    n = self._observed_rows(obs)
                 self.notifier.success(self.name, n)
                 return n
             except Exception as exc:  # noqa: BLE001 — notify then retry/raise
@@ -139,3 +150,20 @@ class Pipeline:
                     self.retry_delay,
                 )
                 time.sleep(self.retry_delay)
+
+    def _observed_rows(self, obs: Observation) -> int:
+        """The row count of the sink's Dataset action. ``Observation.get``
+        would block forever on an observation that never fires, so wait on
+        its future with a bound first."""
+        future = obs._jo.future()
+        deadline = time.monotonic() + _OBSERVATION_WAIT_S
+        while not future.isCompleted():
+            if time.monotonic() > deadline:
+                raise RuntimeError(
+                    f"pipeline {self.name}: the sink returned None but ran no "
+                    "Dataset action over its frame, so no row count was "
+                    "observed. A sink must write through a Dataset action "
+                    "(df.write...) or return the number of rows it loaded."
+                )
+            time.sleep(0.001)
+        return obs.get["rows"]

@@ -107,7 +107,9 @@ class JdbcUpsertWriter:
             "?" if dialect in ("sqlite", "sqlserver") else "%s"
         )
 
-    def write(self, df: DataFrame) -> None:
+    def write(self, df: DataFrame) -> int:
+        """Upsert ``df`` and return the number of rows upserted, counted
+        by the partitions themselves in the same single job."""
         columns = list(df.columns)
         sql = upsert_sql(
             self.table, columns, self.keys, self.dialect, self.placeholder
@@ -115,13 +117,15 @@ class JdbcUpsertWriter:
         factory = self.connection_factory
         batch_size = self.batch_size
 
-        def _write_partition(rows: Iterator[Row]) -> None:
+        def _write_partition(rows: Iterator[Row]) -> Iterator[int]:
+            n = 0
             conn = factory()
             try:
                 cur = conn.cursor()
                 batch: list[tuple] = []
                 for row in rows:
                     batch.append(tuple(row[c] for c in columns))
+                    n += 1
                     if len(batch) >= batch_size:
                         cur.executemany(sql, batch)
                         batch.clear()
@@ -130,8 +134,9 @@ class JdbcUpsertWriter:
                 conn.commit()
             finally:
                 conn.close()
+            yield n
 
-        df.foreachPartition(_write_partition)
+        return df.rdd.mapPartitions(_write_partition).sum()
 
 
 def execute_sink_sql(

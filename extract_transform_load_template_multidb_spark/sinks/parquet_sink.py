@@ -87,7 +87,10 @@ class ParquetSink:
         (``Template-to-MySQL/PgSQL-to-MySQL-Method-1.py:77-81``). Expressed
         as target-anti-join-source ∪ source; the anti join shuffles on the
         key — at 100 TB, bucket the target by the key so the join is
-        co-located, or use a MERGE-capable table format.
+        co-located, or use a MERGE-capable table format. It reads ``df``
+        twice within its single write (keys for the anti join, rows for
+        the union): for a file source that is one snapshot, but a source
+        that can change during the write should be staged first.
         """
         if self._exists():
             target = spark.read.parquet(self.path)

@@ -89,12 +89,12 @@ def test_jdbc_upsert_roundtrip(spark, tmp_path):
     df1 = spark.createDataFrame(
         [Row(id=i, col1=f"v{i}", col2=float(i)) for i in range(10)]
     ).repartition(4)
-    writer.write(df1)
+    assert writer.write(df1) == 10
     # Key collisions update, new keys insert.
     df2 = spark.createDataFrame(
         [Row(id=5, col1="updated", col2=50.0), Row(id=42, col1="new", col2=1.0)]
     )
-    writer.write(df2)
+    assert writer.write(df2) == 2
     con = factory()
     rows = dict(
         (r[0], (r[1], r[2]))

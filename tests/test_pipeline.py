@@ -2,13 +2,23 @@
 
 from __future__ import annotations
 
+import datetime as dt
+import functools
 import os
+import sqlite3
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from extract_transform_load_template_multidb_spark.pipeline import Notifier, Pipeline
-from extract_transform_load_template_multidb_spark.sinks import ParquetSink
+from extract_transform_load_template_multidb_spark.sinks import (
+    JdbcUpsertWriter,
+    ParquetSink,
+)
+from extract_transform_load_template_multidb_spark.sinks.jdbc_upsert import (
+    execute_sink_sql,
+)
 from extract_transform_load_template_multidb_spark.sources import FileSource
 from extract_transform_load_template_multidb_spark.transforms import (
     clean_infinities,
@@ -176,3 +186,150 @@ def test_pipeline_from_config_rejects_unknowns():
                 "sink": {"type": "kafka"},
             }
         )
+
+
+# -- the loaded-row count across every write semantic ----------------------
+#
+# Each case loads a 100-row base (keys 0..99), then a 50-row delta (keys
+# 75..124); row k is dated _DAY0 + k days. The first run creates the target,
+# the second rewrites it, so the windowed modes and upsert take their
+# read-and-swap path. ``Pipeline.run`` must return the rows each run handed
+# the sink, with nothing cached on the way.
+
+_DAY0 = dt.date(2024, 1, 1)
+_CUTOFF = _DAY0 + dt.timedelta(days=74)
+
+_SEMANTICS = {
+    # name: (sink factory, target rows after base + delta)
+    "append": (lambda sink, spark: sink.append, 150),
+    "overwrite": (lambda sink, spark: sink.overwrite, 50),
+    "window_overwrite": (
+        lambda sink, spark: lambda df: sink.window_overwrite(df, "d", _CUTOFF, spark),
+        74 + 50,
+    ),
+    "retention_append": (
+        lambda sink, spark: lambda df: sink.retention_append(df, "d", _CUTOFF, spark),
+        26 + 50,
+    ),
+    "upsert": (lambda sink, spark: lambda df: sink.upsert(df, ("k",), spark), 125),
+}
+
+
+def _keys_file(spark, tmp_path, name: str, first: int, n: int) -> str:
+    path = os.path.join(tmp_path, name)
+    spark.range(first, first + n).select(
+        F.col("id").cast("int").alias("k"),
+        F.date_add(F.lit(_DAY0), F.col("id").cast("int")).alias("d"),
+        (F.col("id") * 1.5).alias("v"),
+    ).repartition(3).write.parquet(path)
+    return path
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _base_then_delta(spark, tmp_path, sink) -> None:
+    """Load the base, then the delta, through ``sink``; each run must
+    return its own row count and cache nothing, neither before the sink
+    runs nor after."""
+    for name, first, n in (("base", 0, 100), ("delta", 75, 50)):
+        src = _keys_file(spark, tmp_path, name, first, n)
+        baseline = _persisted(spark)
+
+        def checked(df):
+            assert _persisted(spark) == baseline
+            return sink(df)
+
+        pipe = Pipeline(
+            name=f"load_{name}",
+            source=lambda s, p=src: s.read.parquet(p),
+            sink=checked,
+            retries=0,
+        )
+        assert pipe.run(spark) == n
+        assert _persisted(spark) == baseline
+
+
+@pytest.mark.parametrize("mode", sorted(_SEMANTICS))
+def test_run_counts_rows_loaded_by_each_write_semantic(spark, tmp_path, mode):
+    make_sink, target_rows = _SEMANTICS[mode]
+    sink = ParquetSink(os.path.join(tmp_path, "target"))
+    _base_then_delta(spark, tmp_path, make_sink(sink, spark))
+    assert spark.read.parquet(sink.path).count() == target_rows
+
+
+def _sqlite(path: str):
+    return sqlite3.connect(path, timeout=60)
+
+
+def test_run_counts_rows_loaded_by_jdbc_upsert(spark, tmp_path):
+    """The JDBC writer's RDD action fires no observation; its own count is
+    the one returned."""
+    factory = functools.partial(_sqlite, os.path.join(tmp_path, "target.db"))
+    execute_sink_sql(
+        factory, ["CREATE TABLE t (k INTEGER PRIMARY KEY, d TEXT, v REAL)"]
+    )
+    writer = JdbcUpsertWriter(factory, "t", keys=["k"], dialect="sqlite")
+    _base_then_delta(spark, tmp_path, writer.write)
+    con = factory()
+    assert con.execute("SELECT count(*) FROM t").fetchone()[0] == 125
+    con.close()
+
+
+def test_run_retry_counts_with_a_fresh_observation(spark, tmp_path):
+    """A sink that fails once then writes: the retry observes its frame
+    with a new Observation (reusing one raises REUSE_OBSERVATION)."""
+    sent = []
+    src = _keys_file(spark, tmp_path, "src", 0, 40)
+    sink = ParquetSink(os.path.join(tmp_path, "out"))
+    calls = {"n": 0}
+
+    def flaky(df):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise RuntimeError("target busy")
+        sink.append(df)
+
+    pipe = Pipeline(
+        name="flaky_load",
+        source=lambda s: s.read.parquet(src),
+        sink=flaky,
+        notifier=Notifier(send=lambda s, b: sent.append(s)),
+        retries=1,
+        retry_delay=0.01,
+    )
+    assert pipe.run(spark) == 40
+    assert calls["n"] == 2
+    assert spark.read.parquet(sink.path).count() == 40
+    assert [s.split(":")[0] for s in sent] == [
+        "Data Load Failed",
+        "Data Load Successful",
+    ]
+
+
+@pytest.mark.parametrize(
+    "sink",
+    [
+        lambda df: None,
+        lambda df: df.rdd.foreachPartition(lambda rows: None),
+    ],
+    ids=["no_action", "rdd_action_only"],
+)
+def test_run_fails_loudly_when_no_count_is_observed(spark, tmp_path, sink):
+    """A sink that returns None without a Dataset action leaves the
+    observation unfired; ``run`` must raise, not block on it."""
+    sent = []
+    src = _keys_file(spark, tmp_path, "src", 0, 10)
+    pipe = Pipeline(
+        name="silent_sink",
+        source=lambda s: s.read.parquet(src),
+        sink=sink,
+        notifier=Notifier(send=lambda s, b: sent.append(s)),
+        retries=0,
+    )
+    start = time.monotonic()
+    with pytest.raises(RuntimeError, match="silent_sink.*Dataset action"):
+        pipe.run(spark)
+    assert time.monotonic() - start < 60
+    assert sent == ["Data Load Failed: silent_sink"]
