@@ -5,6 +5,30 @@ The reference's only data abstraction is a flat relational table snapshot
 BigQuery-to-MySQL-Method-1.py:57``); here it is a lazy distributed
 ``pyspark.sql.DataFrame`` read straight from parquet with column pruning and
 predicate pushdown left to Catalyst.
+
+Two per-session memos keep repeated reads of unchanged files off the
+cluster. Both are keyed by the session object and by ``_path_stamp``, the
+(mtime_ns, size) of a file or of a directory and its newest part, so a
+rewritten file is never served a stale entry:
+
+- ``load_table`` memoizes fixture-table handles (lazy scans, never data).
+- ``read_files`` memoizes the schema a reader infers, keyed by session,
+  format, path, the sorted reader options and the stamp. A hit hands the
+  schema to the reader, so no inference job runs. ``record_schema`` stores
+  the schema of a frame that has just replaced a parquet path whole; a read
+  with it equals a fresh inference, because Spark writes the frame's schema
+  into the footers and makes every column of a supplied file schema
+  nullable, as the write did.
+- Only a local file, or a local directory with no sub-directory, gets a
+  schema entry. The stamp cannot see a glob's matches, a remote or
+  ``file://`` URI (both stamp as missing) or a part file rewritten inside
+  a partition directory, so those paths are inferred on every read. A path
+  without a scheme is taken as local, as on a local session.
+
+Neither memo keys on read-related session conf (``nanosAsLong``, timestamp
+inference, case sensitivity): it is assumed fixed for a session's life, as
+``session.ensure_conf`` sets it once. Entries of stopped sessions are
+dropped on insert (``session.memo_put``).
 """
 
 from __future__ import annotations
@@ -12,8 +36,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
-from extract_transform_load_template_multidb_spark.session import ensure_conf
+from extract_transform_load_template_multidb_spark.session import (
+    ensure_conf,
+    memo_get,
+    memo_put,
+)
 
 TABLES = (
     "region",
@@ -42,6 +71,15 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # computed is stored.
 _TABLE_CACHE: dict = {}
 
+# Memo of inferred file schemas (``read_files``, ``record_schema``): a
+# schema-less file read runs an inference job of its own, even for a single
+# parquet footer. Without the memo that was 1.0 of the 3.1 Spark jobs of a
+# warm ``perfbench`` etl_daily_load job.
+_SCHEMA_MEMO: dict = {}
+
+# Characters that make Spark treat a path as a glob pattern.
+_GLOB_CHARS = frozenset("{}[]*?\\")
+
 
 def _path_stamp(path: str) -> tuple:
     """(mtime_ns, size) of a parquet file or directory-of-parts.
@@ -65,6 +103,58 @@ def _path_stamp(path: str) -> tuple:
         return ("missing",)
 
 
+def _flat_stamp(path: str) -> tuple | None:
+    """``_path_stamp`` of a local file or of a local directory with no
+    sub-directory; None for every path whose changes the stamp cannot see."""
+    if _GLOB_CHARS & set(path):
+        return None
+    stamp = _path_stamp(path)
+    if stamp == ("missing",):
+        return None
+    if os.path.isdir(path):
+        with os.scandir(path) as it:
+            if any(e.is_dir() for e in it):
+                return None
+    return stamp
+
+
+def read_files(
+    spark: SparkSession,
+    path: str,
+    fmt: str = "parquet",
+    options: dict | None = None,
+) -> DataFrame:
+    """``spark.read.format(fmt).options(**options).load(path)``, with the
+    inferred schema memoized under the path's stamp.
+
+    On a hit the memoized schema is handed to the reader and no inference
+    job runs; on a miss the reader infers and the schema is stored. Paths
+    the stamp cannot see changes in are inferred on every read (see the
+    module docstring).
+    """
+    options = options or {}
+    reader = spark.read.format(fmt).options(**options)
+    stamp = _flat_stamp(path)
+    if stamp is None:
+        return reader.load(path)
+    key = (id(spark), fmt, path, tuple(sorted(options.items())), stamp)
+    schema = memo_get(_SCHEMA_MEMO, key, spark)
+    if schema is not None:
+        return reader.schema(schema).load(path)
+    df = reader.load(path)
+    memo_put(_SCHEMA_MEMO, key, spark, df.schema)
+    return df
+
+
+def record_schema(spark: SparkSession, path: str, schema: StructType) -> None:
+    """Store ``schema`` as the parquet schema of ``path`` under its current
+    stamp, for a writer that has just replaced the whole of ``path`` with a
+    frame of that schema: the next ``read_files`` of it infers nothing."""
+    stamp = _flat_stamp(path)
+    if stamp is not None:
+        memo_put(_SCHEMA_MEMO, (id(spark), "parquet", path, (), stamp), spark, schema)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table.
 
@@ -81,9 +171,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     key = (id(spark), path, _path_stamp(path))
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    hit = memo_get(_TABLE_CACHE, key, spark)
+    if hit is not None:
+        return hit
     df = spark.read.parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
@@ -91,9 +181,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    if len(_TABLE_CACHE) > 512:  # bound: many test sessions/tmp fixtures
-        _TABLE_CACHE.clear()
-    _TABLE_CACHE[key] = (spark, df)
+    memo_put(_TABLE_CACHE, key, spark, df)
     return df
 
 

@@ -11,6 +11,7 @@ without code changes.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -30,14 +31,44 @@ _RUNTIME_CONF = {
 }
 
 
+# Bound on each per-session memo (this module's and ``catalog``'s): many test
+# sessions and tmp fixtures.
+_MEMO_BOUND = 512
+# One session may be shared across threads, and an insert scans its memo.
+_MEMO_LOCK = threading.Lock()
+
+
+def memo_get(memo: dict, key, spark: SparkSession):
+    """The value ``memo_put`` stored under ``key`` for this very session
+    object, else None."""
+    hit = memo.get(key)
+    return hit[1] if hit is not None and hit[0] is spark else None
+
+
+def memo_put(memo: dict, key, spark: SparkSession, value) -> None:
+    """Store ``value`` under ``key`` for ``spark``.
+
+    The entry keeps the session object alive, so a collected session's
+    ``id()`` can never alias a live one. So that a memo does not hold every
+    session for the life of the process, entries of sessions whose context
+    has stopped are dropped first, and a memo past ``_MEMO_BOUND`` entries
+    is cleared.
+    """
+    with _MEMO_LOCK:
+        for k in [k for k, (s, _) in memo.items() if s.sparkContext._jsc is None]:
+            del memo[k]
+        if len(memo) > _MEMO_BOUND:
+            memo.clear()
+        memo[key] = (spark, value)
+
+
 # Sessions already configured by ensure_conf. ensure_conf is on every
 # query's plan-build path (catalog.load_table), and its six conf.set py4j
 # round-trips per call are pure per-query driver latency once the session
 # is configured — the engine never unsets these keys, so applying them
 # once per session is equivalent (round-12: the 526-query tail is
-# driver-latency bound). Keyed by id() with the session object itself kept
-# as the value, so a garbage-collected session can never alias a live one.
-_CONF_APPLIED: dict[int, SparkSession] = {}
+# driver-latency bound). Keyed by id(), through memo_get/memo_put.
+_CONF_APPLIED: dict = {}
 
 
 def ensure_conf(spark: SparkSession) -> SparkSession:
@@ -48,7 +79,7 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
     who built the session. Idempotent and memoized per session object:
     repeat calls are a dict lookup, not six py4j round-trips.
     """
-    if _CONF_APPLIED.get(id(spark)) is spark:
+    if memo_get(_CONF_APPLIED, id(spark), spark):
         return spark
     for k, v in _RUNTIME_CONF.items():
         try:
@@ -56,7 +87,7 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
         except Exception:
             # Static conf on this build — keep going; defaults are sane.
             pass
-    _CONF_APPLIED[id(spark)] = spark
+    memo_put(_CONF_APPLIED, id(spark), spark, True)
     return spark
 
 

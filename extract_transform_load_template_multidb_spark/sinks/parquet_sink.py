@@ -16,9 +16,19 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from extract_transform_load_template_multidb_spark.catalog import (
+    read_files,
+    record_schema,
+)
+
 
 class ParquetSink:
-    """A parquet-directory table target with the four reference write modes."""
+    """A parquet-directory table target with the four reference write modes.
+
+    Target reads go through ``catalog.read_files``, and an unpartitioned
+    write that replaces the whole target (``overwrite``, ``_swap``) records
+    the schema it wrote, so the next day's target read infers nothing.
+    """
 
     def __init__(self, path: str, partition_by: tuple[str, ...] = ()):
         self.path = path
@@ -42,6 +52,7 @@ class ParquetSink:
         (``Template-to-BigQuery/MySQL-to-BigQuery-Method-1.py:76-79``).
         """
         self._writer(df).mode("overwrite").parquet(self.path)
+        self._record(df)
 
     # -- windowed modes ----------------------------------------------------
 
@@ -58,7 +69,7 @@ class ParquetSink:
         :meth:`window_overwrite` for the safe variant.
         """
         if self._exists():
-            kept = spark.read.parquet(self.path).filter(F.col(col) >= F.lit(cutoff))
+            kept = read_files(spark, self.path).filter(F.col(col) >= F.lit(cutoff))
             self._swap(kept.unionByName(df, allowMissingColumns=False))
         else:
             self.append(df)
@@ -75,7 +86,7 @@ class ParquetSink:
         full rewrite of history.
         """
         if self._exists():
-            old = spark.read.parquet(self.path).filter(F.col(col) < F.lit(cutoff))
+            old = read_files(spark, self.path).filter(F.col(col) < F.lit(cutoff))
             self._swap(old.unionByName(df.filter(F.col(col) >= F.lit(cutoff))))
         else:
             self.overwrite(df)
@@ -85,16 +96,19 @@ class ParquetSink:
 
         Reference semantics: ``INSERT ... ON DUPLICATE KEY UPDATE``
         (``Template-to-MySQL/PgSQL-to-MySQL-Method-1.py:77-81``). Expressed
-        as target-anti-join-source ∪ source; the anti join shuffles on the
-        key — at 100 TB, bucket the target by the key so the join is
-        co-located, or use a MERGE-capable table format. It reads ``df``
-        twice within its single write (keys for the anti join, rows for
-        the union): for a file source that is one snapshot, but a source
-        that can change during the write should be staged first.
+        as target-anti-join-source ∪ source. Duplicate keys in the source
+        do not change an anti join's result, so they are not de-duplicated
+        first (that would add an aggregate shuffle). A large source makes
+        the anti join shuffle on the key — at 100 TB, bucket the target by
+        the key so the join is co-located, or use a MERGE-capable table
+        format. It reads ``df`` twice within its single write (keys for the
+        anti join, rows for the union): for a file source that is one
+        snapshot, but a source that can change during the write should be
+        staged first.
         """
         if self._exists():
-            target = spark.read.parquet(self.path)
-            kept = target.join(df.select(*keys).distinct(), list(keys), "left_anti")
+            target = read_files(spark, self.path)
+            kept = target.join(df.select(*keys), list(keys), "left_anti")
             self._swap(kept.unionByName(df))
         else:
             self.overwrite(df)
@@ -119,7 +133,7 @@ class ParquetSink:
         merged = delta
         existed = self._exists()
         if existed:
-            merged = spark.read.parquet(self.path).unionByName(delta)
+            merged = read_files(spark, self.path).unionByName(delta)
         merged = merged.groupBy(*group_cols).agg(
             *[F.sum(c).alias(c) for c in sum_cols]
         )
@@ -136,11 +150,28 @@ class ParquetSink:
             w = w.partitionBy(*self.partition_by)
         return w
 
+    def _record(self, df: DataFrame) -> None:
+        """After ``df`` has replaced the whole target: a fresh inference of
+        the target returns ``df``'s schema, so store it. A partitioned
+        layout moves its partition columns last and is never memoized."""
+        if not self.partition_by:
+            record_schema(df.sparkSession, self.path, df.schema)
+
     def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" or f.startswith("p")
-            for f in os.listdir(self.path)
-        )
+        """Whether the target holds data: part files, a ``_SUCCESS`` marker
+        or Hive-style ``name=value`` partition directories (pyarrow's
+        ``write_to_dataset`` and Spark with ``marksuccessfuljobs=false``
+        write those with no marker)."""
+        if not os.path.isdir(self.path):
+            return False
+        with os.scandir(self.path) as it:
+            return any(
+                e.name.endswith(".parquet")
+                or e.name == "_SUCCESS"
+                or e.name.startswith("p")
+                or ("=" in e.name and e.is_dir())
+                for e in it
+            )
 
     def _swap(self, df: DataFrame) -> None:
         """Materialize ``df`` into a staging dir, then replace the target.
@@ -175,3 +206,4 @@ class ParquetSink:
         os.rename(self.path, backup)
         os.rename(staging, self.path)
         shutil.rmtree(backup)
+        self._record(df)

@@ -12,6 +12,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from extract_transform_load_template_multidb_spark.catalog import read_files
 from extract_transform_load_template_multidb_spark.session import ensure_conf
 
 _FORMATS = ("parquet", "json", "csv", "orc")
@@ -31,13 +32,18 @@ class FileSource:
             )
 
     def read(self, spark: SparkSession) -> DataFrame:
+        """The lazy scan of ``path``.
+
+        With a ``schema`` (a DDL string) nothing is inferred. Without one the
+        read goes through ``catalog.read_files``: the inferred schema is
+        memoized under the path's stamp, so re-reading an unchanged local
+        file or flat directory runs no inference job.
+        """
         ensure_conf(spark)
-        reader = spark.read.format(self.format)
         if self.schema:
-            reader = reader.schema(self.schema)
-        for k, v in self.options.items():
-            reader = reader.option(k, v)
-        return reader.load(self.path)
+            reader = spark.read.format(self.format).schema(self.schema)
+            return reader.options(**self.options).load(self.path)
+        return read_files(spark, self.path, self.format, self.options)
 
     def __call__(self, spark: SparkSession) -> DataFrame:
         return self.read(spark)

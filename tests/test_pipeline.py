@@ -333,3 +333,113 @@ def test_run_fails_loudly_when_no_count_is_observed(spark, tmp_path, sink):
         pipe.run(spark)
     assert time.monotonic() - start < 60
     assert sent == ["Data Load Failed: silent_sink"]
+
+
+# -- a warm daily load runs its writes and nothing else -----------------------
+#
+# The five daily job shapes of the ETL benchmark (``perfbench/
+# etl_daily_load.py``) at sf0.001, for two simulated days. Day 1 reads
+# targets that pyarrow wrote, so it infers their schemas; on day 2 every file
+# but the day's new delta is a schema-memo hit, so each job runs only its
+# write. The upsert also infers the new delta and broadcasts its keys.
+
+
+def test_warm_daily_load_runs_only_its_writes(
+    spark, sf_dir, tmp_path, count_jobs, monkeypatch
+):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    events_src = os.path.join(sf_dir, "events.parquet")
+    orders_src = os.path.join(sf_dir, "orders.parquet")
+    customer_src = os.path.join(sf_dir, "customer.parquet")
+    path = {
+        job: str(tmp_path / job)
+        for job in ("events", "window", "retention", "upsert")
+    }
+    # The state a previous day left, written by pyarrow; the SQLite target
+    # starts empty.
+    for job, src in (
+        ("window", orders_src),
+        ("retention", orders_src),
+        ("upsert", customer_src),
+    ):
+        os.makedirs(path[job])
+        pq.write_table(pq.read_table(src), os.path.join(path[job], "part-d0.parquet"))
+    customer = pq.read_table(customer_src)
+    factory = functools.partial(_sqlite, str(tmp_path / "target.db"))
+    execute_sink_sql(
+        factory,
+        [
+            "CREATE TABLE customer (c_custkey INTEGER PRIMARY KEY, c_name TEXT, "
+            "c_nationkey INTEGER, c_acctbal REAL, c_mktsegment TEXT)"
+        ],
+    )
+    jdbc = JdbcUpsertWriter(factory, "customer", keys=["c_custkey"], dialect="sqlite")
+
+    swapped = {}
+    swap = ParquetSink._swap
+
+    def recording_swap(self, df):
+        swapped[self.path] = df
+        return swap(self, df)
+
+    monkeypatch.setattr(ParquetSink, "_swap", recording_swap)
+
+    d0 = dt.datetime(1996, 6, 1)
+    for day in (1, 2):
+        date = d0 + dt.timedelta(days=day)
+        cutoff = date - dt.timedelta(days=30)
+        delta = str(tmp_path / f"delta{day}.parquet")
+        changed = customer.slice(0, 5)
+        pq.write_table(
+            changed.set_column(1, "c_name", pa.array([f"d{day}"] * 5)), delta
+        )
+
+        def as_of(df, date=date):
+            return df.filter(F.col("o_orderdate") < F.lit(date + dt.timedelta(days=1)))
+
+        def last_30_days(df, date=date):
+            return window_filter(df, "o_orderdate", days=30, anchor=date)
+
+        window = [as_of, last_30_days, clean_infinities]
+        jobs = {
+            "events": (events_src, [clean_infinities], ParquetSink(path["events"]).overwrite),
+            "window": (
+                orders_src,
+                window,
+                lambda df, c=cutoff: ParquetSink(path["window"]).window_overwrite(
+                    df, "o_orderdate", c, spark
+                ),
+            ),
+            "retention": (
+                orders_src,
+                window,
+                lambda df, c=cutoff: ParquetSink(path["retention"]).retention_append(
+                    df, "o_orderdate", c, spark
+                ),
+            ),
+            "upsert": (
+                delta,
+                [clean_infinities],
+                lambda df: ParquetSink(path["upsert"]).upsert(df, ("c_custkey",), spark),
+            ),
+            "jdbc": (delta, [clean_infinities], jdbc.write),
+        }
+        ran = {}
+        for job, (src, transforms, sink) in jobs.items():
+            pipe = Pipeline(
+                name=job,
+                source=FileSource(src),
+                transforms=transforms,
+                sink=sink,
+                retries=0,
+            )
+            _, ran[job] = count_jobs(lambda: pipe.run(spark))
+
+    upsert_jobs = ran.pop("upsert")
+    assert ran == {"events": 1, "window": 1, "retention": 1, "jdbc": 1}
+    assert upsert_jobs <= 3
+    plan = swapped[path["upsert"]]._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" not in plan
+    assert spark.read.parquet(path["upsert"]).count() == customer.num_rows

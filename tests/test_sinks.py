@@ -13,6 +13,8 @@ import os
 import pytest
 from pyspark.sql import Row, functions as F
 
+from extract_transform_load_template_multidb_spark import catalog
+from extract_transform_load_template_multidb_spark.catalog import read_files
 from extract_transform_load_template_multidb_spark.sinks import ParquetSink
 
 CUTOFF = dt.datetime(2024, 3, 1)
@@ -97,6 +99,152 @@ def test_parquet_upsert_key_collision(spark, history, tmp_path):
     assert out.count() == 16  # 15 - 1 replaced + 2 (1 update, 1 insert)
     assert out.filter(F.col("id") == 0).collect()[0]["v"] == 99.0
     assert out.filter(F.col("id") == 999).count() == 1
+
+
+def test_upsert_with_duplicate_delta_keys_matches_distinct_formulation(
+    spark, history, tmp_path
+):
+    """The anti join no longer de-duplicates the delta's keys; the target
+    must still equal ``target ⋉̸ distinct(delta keys) ∪ delta``."""
+    sink = ParquetSink(os.path.join(tmp_path, "t"))
+    sink.overwrite(history)
+    delta = spark.createDataFrame(
+        [
+            Row(id=0, date_trans=_day(0), v=99.0),
+            Row(id=0, date_trans=_day(0), v=98.0),
+            Row(id=3, date_trans=_day(3), v=33.0),
+            Row(id=999, date_trans=_day(1), v=7.0),
+            Row(id=999, date_trans=_day(1), v=7.0),
+        ]
+    )
+    before = spark.read.parquet(sink.path)
+    before = spark.createDataFrame(before.collect(), before.schema)
+    expected = before.join(
+        delta.select("id").distinct(), ["id"], "left_anti"
+    ).unionByName(delta)
+    expected_rows = sorted(expected.collect())
+
+    sink.upsert(delta, ("id",), spark)
+    assert sorted(spark.read.parquet(sink.path).collect()) == expected_rows
+
+
+def test_window_overwrite_keeps_history_of_a_marker_less_partitioned_target(
+    spark, tmp_path
+):
+    """pyarrow's ``write_to_dataset`` leaves only ``month=…`` directories,
+    no ``_SUCCESS``: the target still exists, and its rows before the
+    cutoff must survive the window reload."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t")
+    pq.write_to_dataset(
+        pa.table(
+            {
+                "id": pa.array(range(20), pa.int64()),
+                "d": pa.array(range(20), pa.int32()),
+                "month": pa.array([i // 10 for i in range(20)], pa.int32()),
+            }
+        ),
+        path,
+        partition_cols=["month"],
+    )
+    assert sorted(os.listdir(path)) == ["month=0", "month=1"]
+
+    sink = ParquetSink(path, partition_by=("month",))
+    batch = spark.createDataFrame(
+        [(100 + i, 15 + i, 1) for i in range(5)], "id bigint, d int, month int"
+    )
+    sink.window_overwrite(batch, "d", 15, spark)
+    out = spark.read.parquet(path)
+    assert sorted(r.id for r in out.filter("d < 15").collect()) == list(range(15))
+    assert sorted(r.id for r in out.filter("d >= 15").collect()) == list(
+        range(100, 105)
+    )
+
+
+# -- the schema a whole-target write records -----------------------------------
+#
+# Each write below replaces the whole target, so it records its frame's
+# schema (``catalog.record_schema``); the next target read must be a memo hit
+# that runs no job and equals a fresh inference. The frames carry non-null,
+# nested, decimal, TIMESTAMP_NTZ and field-metadata columns.
+
+
+def _rich(spark, first: int, n: int):
+    return spark.range(first, first + n).select(
+        "id",
+        F.date_add(F.lit(dt.date(2024, 1, 1)), F.col("id").cast("int")).alias("d"),
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("s"),
+        F.array(F.col("id"), F.lit(2)).alias("arr"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        (F.col("id") / 3).cast("decimal(12,3)").alias("dec"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp_ntz").alias("ntz"),
+        F.col("id").alias("tagged", metadata={"comment": "kept"}),
+    )
+
+
+def _partials(spark, first: int, n: int):
+    return spark.range(first, first + n).select(
+        (F.col("id") % 3).alias("g"), F.lit(1).alias("n")
+    )
+
+
+_CUT = dt.date(2024, 1, 6)
+_WHOLE_TARGET_WRITES = {
+    # name: (frame factory, write)
+    "overwrite": (_rich, lambda sink, df, spark: sink.overwrite(df)),
+    "window_overwrite": (
+        _rich,
+        lambda sink, df, spark: sink.window_overwrite(df, "d", _CUT, spark),
+    ),
+    "retention_append": (
+        _rich,
+        lambda sink, df, spark: sink.retention_append(df, "d", _CUT, spark),
+    ),
+    "upsert": (_rich, lambda sink, df, spark: sink.upsert(df, ("id",), spark)),
+    "merge_aggregate": (
+        _partials,
+        lambda sink, df, spark: sink.merge_aggregate(df, ("g",), spark),
+    ),
+}
+
+
+@pytest.mark.parametrize("mode", sorted(_WHOLE_TARGET_WRITES))
+def test_whole_target_write_records_what_inference_returns(
+    spark, tmp_path, count_jobs, mode
+):
+    frame, write = _WHOLE_TARGET_WRITES[mode]
+    sink = ParquetSink(os.path.join(tmp_path, "t"))
+    # The first write creates the target, the second rewrites it (_swap).
+    write(sink, frame(spark, 0, 10), spark)
+    write(sink, frame(spark, 5, 10), spark)
+
+    got, jobs = count_jobs(lambda: read_files(spark, sink.path))
+    assert jobs == 0
+    fresh = spark.read.parquet(sink.path)
+    assert got.schema.json() == fresh.schema.json()
+    assert sorted(map(str, got.collect())) == sorted(map(str, fresh.collect()))
+
+
+def test_append_records_no_schema(spark, tmp_path):
+    """The files an append leaves behind may disagree with the appended
+    frame, so nothing is recorded and the next read infers."""
+    sink = ParquetSink(os.path.join(tmp_path, "t"))
+    sink.overwrite(spark.createDataFrame([(1, "a")], "id bigint, s string"))
+    sink.append(
+        spark.createDataFrame([(2, "b", 1.5)], "id bigint, s string, extra double")
+    )
+    key = (id(spark), "parquet", sink.path, (), catalog._flat_stamp(sink.path))
+    assert key not in catalog._SCHEMA_MEMO
+    got = read_files(spark, sink.path)
+    assert got.schema.json() == spark.read.parquet(sink.path).schema.json()
+
+
+def test_partitioned_write_records_no_schema(spark, tmp_path):
+    sink = ParquetSink(os.path.join(tmp_path, "t"), partition_by=("g",))
+    sink.overwrite(_partials(spark, 0, 0))
+    assert sink.path not in {key[2] for key in catalog._SCHEMA_MEMO}
 
 
 def test_bigquery_sink_disposition_mapping():
