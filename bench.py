@@ -57,403 +57,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from extract_transform_load_template_multidb_spark.queries import all_queries
 from extract_transform_load_template_multidb_spark.session import get_spark
 
-# Round-8 policy: EVERY registered query is benched, so the
-# 2×-of-DuckDB-baseline bar is audited registry-wide (rounds ≤7 benched a
-# 377-name curated subset, leaving 30% of the registry unmeasured).
-# HEADLINE is derived from the registry at import time; a query may be
-# excluded ONLY with a committed reason in EXCLUDED.
-EXCLUDED: dict[str, str] = {}
-
-# The legacy curated list is kept (now a prefix-ordering hint only): these
-# names run first so partial sweeps and truncated logs lead with the
-# flagship shapes.
-_CURATED_FIRST = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q13_order_count_distribution",
-    "q18_large_volume_orders",
-    "join_broadcast_dim",
-    "window_rank_topn_per_group",
-    "agg_rollup",
-    "etl_window_extract",
-    "agg_count_distinct",
-    "join_asof_latest_order",
-    "stream_tumbling_counts",
-    "stream_interval_join",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_clusters_ngram",
-    "sim_cosine_topk_bruteforce",
-    "sim_cosine_topk_lsh",
-    "text_quality_score",
-    "text_lang_id",
-    "agg_salted_hot_keys",
-    "curation_chunk_documents",
-    "curation_pack_sequences",
-    "scd2_priority_history",
-    "dq_null_profile_events",
-    "mm_extract_features",
-    "ts_resample_carry_forward",
-    "scalar_map_ops",
-    "pyfunc_vec_l2_norm",
-    "pyfunc_grouped_median",
-    "dedup_clusters_minhash",
-    "dedup_clusters_star",
-    "dedup_canonical_docs",
-    "sim_cosine_topk_ivf",
-    "curation_decontaminate",
-    "dedup_minhash_paragraphs",
-    "mm_decode_ppm",
-    "dedup_simhash_pairs",
-    "text_rare_ngram_ratio",
-    "curation_dedup_paragraphs",
-    "dedup_incremental_minhash",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q9_product_profit",
-    "q21_waiting_suppliers",
-    "text_tfidf_topterms",
-    "text_bm25_search",
-    "text_unigram_logprob",
-    "ts_rolling_zscore",
-    "window_cohort_retention",
-    "mm_decode_wav",
-    "sim_cosine_topk_pq",
-    "ts_ohlc_rollup",
-    "text_bpe_pair_stats",
-    "dq_value_histogram",
-    "text_char_entropy",
-    "stream_interval_join_left",
-    "graph_triangle_stats",
-    "dedup_ngram_containment",
-    "join_salted_skew",
-    "agg_mode_per_group",
-    "graph_kcore",
-    "window_ntile_quartiles",
-    "curation_dedup_weights",
-    "curation_keep_longest",
-    "text_bigram_logprob",
-    "set_intersect_all",
-    "set_except_all",
-    "join_null_safe_equal",
-    "mm_audio_dominant_freq",
-    "mm_resize_ppm",
-    "dedup_nearest_neighbor_doc",
-    "dq_benford_first_digit",
-    "window_percent_rank_cume",
-    "agg_linear_trend",
-    "scalar_bitwise_ops",
-    "ts_time_weighted_avg",
-    "ts_interpolate_linear",
-    "etl_cdc_latest_state",
-    "etl_mv_incremental_refresh",
-    "window_last_touch_attribution",
-    "dq_outlier_iqr",
-    "curation_domain_cap",
-    "graph_degree_distribution",
-    "mm_image_dhash",
-    "sim_cosine_topk_matmul",
-    "dq_table_checksum",
-    "dq_mad_robust_spread",
-    "mm_dhash_hamming_pairs",
-    "agg_entropy_categorical",
-    "agg_skew_kurtosis",
-    "agg_corr_per_group",
-    "etl_dead_letter_json",
-    "ts_autocorr_lag1",
-    "scalar_variant_ops",
-    "agg_hll_sketch_merge",
-    "text_lang_id_confusion",
-    "curation_corpus_datacard",
-    "join_scd2_point_in_time",
-    "dedup_prefix_truncates",
-    "curation_source_gini",
-    "ts_session_conversion",
-    "etl_cdc_apply_with_deletes",
-    "text_hashing_vectorizer",
-    "ts_cumulative_unique_users",
-    "window_time_to_purchase",
-    "window_share_of_parent",
-    "ts_wow_growth",
-    "dedup_dup_rate_report",
-    "dq_missing_hours",
-    "curation_token_budget_select",
-    "dq_freshness_watermarks",
-    "subquery_exists_flags",
-    "window_moving_median",
-    "agg_chi_square_independence",
-    "ts_ewma_revenue",
-    "graph_linkpred_common_neighbors",
-    "sim_knn_label_vote",
-    "window_cusum_changepoint",
-    "agg_welch_t_test",
-    "sim_label_centroid_margin",
-    "scalar_url_parsing",
-    "join_lateral_topn_orders",
-    "subquery_any_all_quantified",
-    "graph_modularity_dedup_partition",
-    "agg_mann_whitney_u",
-    "ts_seasonality_strength",
-    "dedup_source_shingle_overlap",
-    "sim_hard_negative_mining",
-    "dedup_exact_normalized",
-    "sim_pq_reconstruction_error",
-    "dq_candidate_key_discovery",
-    "ts_bounce_rate",
-    "curation_temperature_mixture_weights",
-    "text_code_detection",
-    "scalar_ipv4_subnet_rollup",
-    "agg_argmax_min_by_max_by",
-    "ts_seasonal_naive_backtest",
-    "ts_rolling_corr_clicks_purchases",
-    "sim_embedding_drift_by_label",
-    "agg_hill_tail_index",
-    "window_top_movers_wow",
-    "dq_referential_health_dashboard",
-    "text_zipf_fit",
-    "agg_trimmed_winsorized_means",
-    "stream_tumbling_distinct_users",
-    "join_theta_price_band",
-    "mm_wav_silence_ratio",
-    "mm_ppm_channel_histogram",
-    "agg_ks_two_sample",
-    "text_word_burstiness",
-    "ts_fourier_top_periods",
-    "agg_empirical_bayes_rates",
-    "curation_sampling_manifest",
-    "graph_rich_club_coefficient",
-    "text_prf_query_expansion",
-    "dq_format_conformance",
-    "ts_expected_shortfall",
-    "agg_ab_power_analysis",
-    "ts_rsi_momentum",
-    "dedup_lexical_semantic_agreement",
-    "agg_two_proportion_z_test",
-    "agg_diff_in_differences",
-    "agg_gini_split_finder",
-    "text_lang_id_cohens_kappa",
-    "sim_precision_at_k",
-    "mm_image_channel_entropy",
-    "ts_session_path_trigrams",
-    "ts_multi_touch_attribution",
-    "dedup_cluster_source_mix",
-    "agg_spearman_rank_corr",
-    "agg_covariance_matrix",
-    "agg_pca_top_component",
-    "agg_mahalanobis_outliers",
-    "agg_ols_two_features",
-    "agg_kmeans_1d_two_centers",
-    "ts_granger_predictive_lift",
-    "ts_count_overdispersion",
-    "ts_event_rate_ci",
-    "ts_weekday_anova",
-    "text_heaps_law_fit",
-    "dq_double_fire_detector",
-    "agg_capture_recapture",
-    "text_good_turing_unseen",
-    "agg_bootstrap_se_mean",
-    "mm_decode_jpeg",
-    "scalar_datetime_functions",
-    "ts_acf_multi_lag",
-    "text_flesch_reading_ease",
-    "agg_benjamini_hochberg",
-    "window_gaps_islands",
-    "agg_theil_sen_trend",
-    "sim_range_search_cosine",
-    "ts_seasonal_decompose_additive",
-    "agg_quantile_bands_by_group",
-    "agg_kaplan_meier_survival",
-    "window_range_trailing_7d",
-    "agg_association_rules_lift",
-    "agg_mutual_information",
-    "text_bigram_pmi_topk",
-    "subquery_correlated_scalar",
-    "dq_key_sequence_gaps",
-    "mm_jpeg_resize_reencode",
-    "ts_durbin_watson",
-    "ts_mann_kendall_trend",
-    "ts_page_hinkley_drift",
-    "ts_pacf_durbin_levinson",
-    "ts_hurst_aggregated_variance",
-    "agg_cohens_d_effect_size",
-    "agg_kendall_tau_daily",
-    "agg_cramers_v",
-    "agg_levene_brown_forsythe",
-    "text_skipgram_ppmi",
-    "ts_markov_entropy_rate",
-    "ts_gumbel_daily_max_fit",
-    "subquery_not_in_null_semantics",
-    "set_symmetric_difference",
-    "mm_audio_clipping_detect",
-    "graph_linkpred_adamic_adar",
-    "graph_local_clustering_histogram",
-    "agg_fisher_exact_2x2",
-    "text_token_simpson_diversity",
-    "agg_negative_binomial_fit",
-    "agg_tukey_hsd_qstats",
-    "sim_mmr_diversified_topk",
-    "text_rake_keywords",
-    "mm_image_edge_density",
-    "sim_lsh_candidate_recall",
-    "sim_davies_bouldin_index",
-    "curation_dsir_importance",
-    "ts_holt_linear_forecast",
-    "text_mattr_lexical_diversity",
-    "agg_cuped_variance_reduction",
-    "ts_sprt_ab_monitor",
-    "join_range_count_prefix_sum",
-    "ts_croston_intermittent_demand",
-    "text_burrows_delta",
-    "join_bloom_prefilter",
-    "dq_shuffle_skew_planner",
-    "window_attribution_linear",
-    "graph_katz_centrality",
-    "text_jsd_source_divergence",
-    "agg_srm_guardrail",
-    "agg_empirical_bayes_shrinkage",
-    "ts_holt_winters_weekly",
-    "window_rfm_segmentation",
-    "agg_conformal_interval",
-    "dedup_boilerplate_ngrams",
-    "agg_cramer_von_mises_2sample",
-    "ts_cohort_ltv_projection",
-    "agg_mcnemar_paired_test",
-    "text_textrank_keywords",
-    "ts_interrupted_time_series",
-    "ts_seasonal_naive_skill",
-    "agg_gamma_mom_fit",
-    "ts_seasonal_residual_anomalies",
-    "window_signup_to_purchase_latency",
-    "agg_stratified_ate",
-    "ts_seasonal_strength",
-    "window_markov_removal_attribution",
-    "sim_lsh_mrr",
-    "agg_wilcoxon_signed_rank",
-    "agg_friedman_weekday_test",
-    "feature_target_encoding",
-    "agg_auc_rank_sum",
-    "agg_expected_calibration_error",
-    "agg_probabilistic_scores",
-    "ts_kpss_stationarity",
-    "agg_qini_uplift_deciles",
-    "ts_adf_unit_root",
-    "ts_pettitt_changepoint",
-    "sim_simplified_silhouette",
-    "graph_ktruss_edges",
-    "dq_population_stability",
-    "agg_grubbs_outlier",
-    "agg_isotonic_calibration",
-    "feature_woe_iv",
-    "sim_rrf_fusion",
-    "text_ndcg_at_10",
-    "agg_nelson_aalen_hazard",
-    "ts_spectral_entropy",
-    "graph_hits_bipartite",
-    "window_user_lifecycle_states",
-    "agg_vif_multicollinearity",
-    "join_allen_interval_relations",
-    "graph_bipartite_projection",
-    "agg_cms_heavy_hitters",
-    "agg_simpson_paradox_detector",
-    "ts_peak_prominence",
-    "window_concurrency_sweep",
-    "agg_contingency_residuals",
-    "agg_average_precision",
-    "ts_ljung_box_q",
-    "ts_kruskal_wallis_weekday",
-    "ts_haar_wavelet_energy",
-    "mm_image_tile_stats",
-    "pyfunc_mapinpandas_minmax",
-    "stream_hist_quantile_sketch",
-    "window_alert_debounce",
-    "join_disjunctive_union_rewrite",
-    "agg_confusion_threshold_metrics",
-    "text_phrase_search_positional",
-    "window_clamped_running_balance",
-    "dq_duplicate_payment_detector",
-    "scd2_as_was_vs_as_is",
-    "join_nearest_price_neighbor",
-    "window_interval_coalesce",
-    "ts_western_electric_rules",
-    "curation_weighted_sample_es",
-    "mm_wav_zero_crossing_rate",
-    "dq_interval_integrity_audit",
-    "window_rolling_ols_slope",
-    "agg_ratio_metric_delta_ci",
-    "join_asof_forward_next_order",
-    "scalar_mod97_checksum",
-    "ts_record_breaking_days",
-    "agg_price_volume_mix",
-    "agg_abc_xyz_classification",
-    "text_query_likelihood_dirichlet",
-    "curation_span_corruption_stats",
-    "window_attribution_time_decay",
-    "dq_slo_burn_rate_alerts",
-    "dq_join_cardinality_forecast",
-    "ts_binary_segmentation_pettitt",
-    "graph_deterministic_walks",
-    "mm_image_gradient_orientation",
-    "set_relational_division",
-    "ts_markov_next_event_accuracy",
-    "ts_max_drawdown_demeaned",
-    "text_kwic_concordance",
-    "agg_hill_tail_index_top200",
-    "agg_diff_in_differences_orders",
-    "ts_max_drawdown",
-    "ts_retention_decay_fit",
-    "dq_categorical_drift_chi2",
-    "agg_beta_binomial_posterior",
-    "scalar_base62_encode",
-    # round 7 additions
-    "mm_decode_png",
-    "mm_png_resize_reencode",
-    "mm_png_alpha_profile",
-    "graph_linkpred_jaccard",
-    "window_bollinger_bands",
-    "ts_sax_symbolic",
-    "scalar_luhn_checksum",
-    "scalar_haversine_pairs",
-    "join_fuzzy_levenshtein",
-    "feature_robust_scaler",
-    "feature_hashed_cross",
-    "agg_poisson_rate_ratio",
-    "dedup_url_canonical_groups",
-    "dq_benford_first_two_digits",
-    "agg_hodges_lehmann",
-    "agg_kmv_distinct_sketch",
-    "scalar_uuid3_surrogate_keys",
-    "scalar_geohash_encode",
-    "window_anchored_vwap",
-    "sim_ivf_nprobe_recall",
-    "text_contrastive_source_keywords",
-    "curation_perplexity_filter",
-    "etl_compaction_bin_packing",
-    "layout_hilbert_order",
-    "feature_target_encoding_loo",
-    "mm_image_histogram_equalization",
-    "dedup_bbit_minhash_estimate",
-    "dq_partition_merkle_checksums",
-    "etl_unpivot_metrics",
-    "agg_histogram_fd_bins",
-    "stream_sliding_topk_types",
-    "agg_permutation_test_mean_diff",
-    "curation_tokenizer_fertility",
-    "layout_pruning_simulation",
-    "graph_label_propagation_semi",
-    "scd2_overlap_repair",
-    "dq_functional_dependency_audit",
-    "text_kneser_ney_bigram_logprob",
-    "agg_ipf_raking_2d",
-    "mm_decode_gif",
-]
-
-HEADLINE = [n for n in _CURATED_FIRST if n not in EXCLUDED]
-HEADLINE += [
-    n
-    for n in all_queries()
-    if n not in EXCLUDED and n not in _CURATED_FIRST
-]
+# Every registered query is benched, in registry order, so the
+# 2×-of-DuckDB-baseline bar is audited registry-wide.
+HEADLINE = list(all_queries())
 
 
 # Bumped whenever _normalize_plan changes: stored fingerprints from an
@@ -574,29 +180,6 @@ def main() -> None:
     qs["q1_pricing_summary"](spark, sf_dir).count()
 
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2"))
-    # Repeat caps for the heavy tail so the bench's wall-clock stays
-    # bounded when the driver raises SPARK_GRAFT_BENCH_REPEATS: the
-    # multi-ten-second pair/cluster pipelines cap at min-of-2.
-    # (dedup_clusters_minhash was capped at 1 when its label-prop
-    # closure ran ~3 min at sf0.1; the round-10 two-phase closure
-    # brought the query to ~8-25 s, so it gets the normal cap.)
-    heavy = {
-        "dedup_clusters_minhash": 3,
-        "dedup_clusters_star": 2,
-        "dedup_canonical_docs": 2,
-        "dedup_minhash_lsh": 2,
-        "dedup_ngram_jaccard": 2,
-        "dedup_minhash_paragraphs": 2,
-        "dedup_simhash_pairs": 2,
-        "dedup_incremental_minhash": 2,
-        "curation_dedup_paragraphs": 2,
-        "dedup_ngram_containment": 2,
-        "graph_triangle_stats": 2,
-        "graph_kcore": 2,
-        "curation_dedup_weights": 2,
-        "curation_keep_longest": 2,
-        "dedup_nearest_neighbor_doc": 2,
-    }
     # SPARK_GRAFT_ONLY="a,b,c" restricts the sweep to a comma-separated
     # subset of HEADLINE — for targeted re-timing of individual queries
     # (e.g. adjudicating a host-noise burst) without the full sweep.
@@ -606,12 +189,10 @@ def main() -> None:
     raw: dict[str, list[float]] = {}
     fps: dict[str, str] = {}
     for name in HEADLINE:
-        if name not in qs:
-            continue
         if only is not None and name not in only:
             continue
         runs = []
-        for i in range(max(1, min(repeats, heavy.get(name, repeats)))):
+        for i in range(max(1, repeats)):
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             if i == 0:

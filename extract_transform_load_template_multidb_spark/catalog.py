@@ -7,7 +7,8 @@ BigQuery-to-MySQL-Method-1.py:57``); here it is a lazy distributed
 predicate pushdown left to Catalyst.
 
 Two per-session memos keep repeated reads of unchanged files off the
-cluster. Both are keyed by the session object and by ``_path_stamp``, the
+cluster. Both are keyed by the JVM session (``session.session_key``, so
+the micro-batches of a stream share entries) and by ``_path_stamp``, the
 (mtime_ns, size) of a file or of a directory and its newest part, so a
 rewritten file is never served a stale entry:
 
@@ -42,6 +43,7 @@ from extract_transform_load_template_multidb_spark.session import (
     ensure_conf,
     memo_get,
     memo_put,
+    session_key,
 )
 
 TABLES = (
@@ -64,11 +66,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # re-reads parquet footers for schema inference and (for events) re-analyzes
 # the plan for the dtypes probe — pure per-query driver latency when 571
 # queries each reload the same fixture tables (round-12: the tail is
-# driver-latency bound). Keyed by session identity (object kept alive, so a
-# collected session can't alias), path, and the parquet file set's
-# (mtime_ns, size) so a rewritten fixture can never be served a stale file
-# listing. Every action on the cached handle still scans parquet — nothing
-# computed is stored.
+# driver-latency bound). Keyed by the JVM session, path, and the parquet
+# file set's (mtime_ns, size) so a rewritten fixture can never be served a
+# stale file listing. Every action on the cached handle still scans
+# parquet — nothing computed is stored.
 _TABLE_CACHE: dict = {}
 
 # Memo of inferred file schemas (``read_files``, ``record_schema``): a
@@ -137,8 +138,9 @@ def read_files(
     stamp = _flat_stamp(path)
     if stamp is None:
         return reader.load(path)
-    key = (id(spark), fmt, path, tuple(sorted(options.items())), stamp)
-    schema = memo_get(_SCHEMA_MEMO, key, spark)
+    opts = tuple(sorted(options.items()))
+    key = (session_key(spark), fmt, path, opts, stamp)
+    schema = memo_get(_SCHEMA_MEMO, key)
     if schema is not None:
         return reader.schema(schema).load(path)
     df = reader.load(path)
@@ -152,7 +154,8 @@ def record_schema(spark: SparkSession, path: str, schema: StructType) -> None:
     frame of that schema: the next ``read_files`` of it infers nothing."""
     stamp = _flat_stamp(path)
     if stamp is not None:
-        memo_put(_SCHEMA_MEMO, (id(spark), "parquet", path, (), stamp), spark, schema)
+        key = (session_key(spark), "parquet", path, (), stamp)
+        memo_put(_SCHEMA_MEMO, key, spark, schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -170,8 +173,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     ensure_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (id(spark), path, _path_stamp(path))
-    hit = memo_get(_TABLE_CACHE, key, spark)
+    key = (session_key(spark), path, _path_stamp(path))
+    hit = memo_get(_TABLE_CACHE, key)
     if hit is not None:
         return hit
     df = spark.read.parquet(path)

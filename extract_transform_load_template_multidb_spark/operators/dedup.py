@@ -612,13 +612,6 @@ def word_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(positional_shingles_from_tokens(toks, n))
 
 
-
-# Per-session cache of AQE's advisory partition size (used by _fan_out's
-# gate); id-keyed, value includes nothing session-owning so staleness after
-# session churn is harmless (worst case: a re-read of one conf value).
-_ADVISORY_BYTES: dict[int, int] = {}
-
-
 def _fan_out(df: DataFrame) -> DataFrame:
     """Spread a frame over the session's parallelism when its input is too
     small to arrive in >= cores partitions (a small fixture table is ONE
@@ -653,22 +646,18 @@ def _fan_out(df: DataFrame) -> DataFrame:
         )
     except Exception:
         return df  # stats unavailable: never force a cluster-scale shuffle
-    advisory = _ADVISORY_BYTES.get(id(spark))
-    if advisory is None:
-        advisory = 64 * 1024 * 1024
-        try:
-            advisory = int(
-                spark._jvm.org.apache.spark.network.util.JavaUtils
-                .byteStringAsBytes(
-                    spark.conf.get(
-                        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                        "64m",
-                    )
+    advisory = 64 * 1024 * 1024
+    try:
+        advisory = int(
+            spark._jvm.org.apache.spark.network.util.JavaUtils
+            .byteStringAsBytes(
+                spark.conf.get(
+                    "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"
                 )
             )
-        except Exception:
-            pass
-        _ADVISORY_BYTES[id(spark)] = advisory
+        )
+    except Exception:
+        pass
     if est < cores * advisory:
         return df.repartition(cores)
     return df

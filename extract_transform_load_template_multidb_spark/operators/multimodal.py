@@ -66,6 +66,31 @@ _FRAME_SCHEMA = (
 )
 
 
+def _map_assets(df: DataFrame, per_asset, schema: str) -> DataFrame:
+    """Arrow-batched ``mapInPandas`` of ``per_asset(raw)`` over the
+    ``(asset_id, payload)`` rows of ``df``: ``schema``'s first column is
+    ``asset_id``, its last ``err``, and ``per_asset`` returns the values
+    between them. A ``ValueError`` or ``NotImplementedError`` becomes the
+    row's ``err`` (its message cut to 80 chars, the other columns NULL),
+    so one malformed or exotic file cannot kill a 100 TB stage. A NULL
+    payload decodes as empty bytes. Narrow map, no shuffle."""
+    cols = [c.split()[0] for c in schema.split(",")]
+    blanks = (None,) * (len(cols) - 2)
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
+                raw = bytes(payload) if payload is not None else b""
+                try:
+                    rows.append((asset_id, *per_asset(raw), None))
+                except (ValueError, NotImplementedError) as ex:
+                    rows.append((asset_id, *blanks, str(ex)[:80]))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return df.mapInPandas(fn, schema)
+
+
 def media_batch_conf(target_rows: int | None = None) -> dict[str, str]:
     """Session conf bounding how many wide media rows a pandas UDF sees at
     once — the no-extra-pass way to control batch memory.
@@ -402,48 +427,14 @@ def decode_jpegs(df: DataFrame) -> DataFrame:
         jpeg as J,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, nc, px = J.parse_jpeg(raw)
-                    n = w * h
-                    sums = px.reshape(n, 3).astype("int64").sum(axis=0)
-                    rows.append(
-                        (
-                            asset_id,
-                            w,
-                            h,
-                            nc,
-                            float(sums[0]) / n,
-                            float(sums[1]) / n,
-                            float(sums[2]) / n,
-                            None,
-                        )
-                    )
-                except (ValueError, NotImplementedError) as ex:
-                    rows.append(
-                        (asset_id, None, None, None, None, None, None,
-                         str(ex)[:80])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "width",
-                    "height",
-                    "n_components",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                    "err",
-                ],
-            )
+    def stats(raw: bytes) -> tuple:
+        w, h, nc, px = J.parse_jpeg(raw)
+        n = w * h
+        sums = px.reshape(n, 3).astype("int64").sum(axis=0)
+        return (w, h, nc, *(float(v) / n for v in sums))
 
-    return df.select("asset_id", "payload").mapInPandas(
-        fn, _DECODE_JPEG_SCHEMA
+    return _map_assets(
+        df.select("asset_id", "payload"), stats, _DECODE_JPEG_SCHEMA
     )
 
 
@@ -511,50 +502,14 @@ def decode_pngs(df: DataFrame) -> DataFrame:
         png as P,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, ch, px = P.parse_png(raw)
-                    n = w * h
-                    sums = (
-                        px[:, :, :3].reshape(n, 3).astype("int64").sum(axis=0)
-                    )
-                    rows.append(
-                        (
-                            asset_id,
-                            w,
-                            h,
-                            ch,
-                            float(sums[0]) / n,
-                            float(sums[1]) / n,
-                            float(sums[2]) / n,
-                            None,
-                        )
-                    )
-                except (ValueError, NotImplementedError) as ex:
-                    rows.append(
-                        (asset_id, None, None, None, None, None, None,
-                         str(ex)[:80])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "width",
-                    "height",
-                    "n_channels",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                    "err",
-                ],
-            )
+    def stats(raw: bytes) -> tuple:
+        w, h, ch, px = P.parse_png(raw)
+        n = w * h
+        sums = px[:, :, :3].reshape(n, 3).astype("int64").sum(axis=0)
+        return (w, h, ch, *(float(v) / n for v in sums))
 
-    return df.select("asset_id", "payload").mapInPandas(
-        fn, _DECODE_PNG_SCHEMA
+    return _map_assets(
+        df.select("asset_id", "payload"), stats, _DECODE_PNG_SCHEMA
     )
 
 
@@ -611,49 +566,14 @@ def decode_gifs(df: DataFrame) -> DataFrame:
         gif as G,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, pal, idx = G.parse_gif(raw)
-                    rgb = pal[idx.ravel()].astype("int64")
-                    n = w * h
-                    sums = rgb.sum(axis=0)
-                    rows.append(
-                        (
-                            asset_id,
-                            w,
-                            h,
-                            int(len(pal)),
-                            float(sums[0]) / n,
-                            float(sums[1]) / n,
-                            float(sums[2]) / n,
-                            None,
-                        )
-                    )
-                except (ValueError, NotImplementedError) as ex:
-                    rows.append(
-                        (asset_id, None, None, None, None, None, None,
-                         str(ex)[:80])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "width",
-                    "height",
-                    "n_colors",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                    "err",
-                ],
-            )
+    def stats(raw: bytes) -> tuple:
+        w, h, pal, idx = G.parse_gif(raw)
+        sums = pal[idx.ravel()].astype("int64").sum(axis=0)
+        n = w * h
+        return (w, h, int(len(pal)), *(float(v) / n for v in sums))
 
-    return df.select("asset_id", "payload").mapInPandas(
-        fn, _DECODE_GIF_SCHEMA
+    return _map_assets(
+        df.select("asset_id", "payload"), stats, _DECODE_GIF_SCHEMA
     )
 
 
@@ -1206,54 +1126,21 @@ def resize_reencode_jpegs(df: DataFrame, factor: int = 2) -> DataFrame:
         jpeg as J,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qt = J.flat_tables(16)
-        for pdf in batches:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, _, px = J.parse_jpeg(raw)
-                    small = px[::factor, ::factor, :]
-                    if small.size == 0:
-                        raise ValueError("resize factor exceeds image")
-                    re_raw = J.encode_baseline_jpeg(small, qtables=qt)
-                    w2, h2, _, px2 = J.parse_jpeg(re_raw)
-                    n = w2 * h2
-                    sums = (
-                        px2.reshape(n, 3).astype("int64").sum(axis=0)
-                    )
-                    rows.append(
-                        (
-                            asset_id,
-                            w2,
-                            h2,
-                            float(sums[0]) / n,
-                            float(sums[1]) / n,
-                            float(sums[2]) / n,
-                            None,
-                        )
-                    )
-                except (ValueError, NotImplementedError) as ex:
-                    rows.append(
-                        (asset_id, None, None, None, None, None,
-                         str(ex)[:80])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "width",
-                    "height",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                    "err",
-                ],
-            )
+    qt = J.flat_tables(16)
 
-    return df.select("asset_id", "payload").mapInPandas(
-        fn, _RESIZE_JPEG_SCHEMA
+    def stats(raw: bytes) -> tuple:
+        w, h, _, px = J.parse_jpeg(raw)
+        small = px[::factor, ::factor, :]
+        if small.size == 0:
+            raise ValueError("resize factor exceeds image")
+        re_raw = J.encode_baseline_jpeg(small, qtables=qt)
+        w2, h2, _, px2 = J.parse_jpeg(re_raw)
+        n = w2 * h2
+        sums = px2.reshape(n, 3).astype("int64").sum(axis=0)
+        return (w2, h2, *(float(v) / n for v in sums))
+
+    return _map_assets(
+        df.select("asset_id", "payload"), stats, _RESIZE_JPEG_SCHEMA
     )
 
 
@@ -1275,58 +1162,19 @@ def resize_reencode_pngs(df: DataFrame, factor: int = 2) -> DataFrame:
         png as P,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, ch, px = P.parse_png(raw)
-                    small = px[::factor, ::factor, :]
-                    if small.size == 0:
-                        raise ValueError("resize factor exceeds image")
-                    re_raw = P.encode_png(small, filters=(2, 4))
-                    w2, h2, ch2, px2 = P.parse_png(re_raw)
-                    n = w2 * h2
-                    sums = (
-                        px2[:, :, :3]
-                        .reshape(n, 3)
-                        .astype("int64")
-                        .sum(axis=0)
-                    )
-                    rows.append(
-                        (
-                            asset_id,
-                            w2,
-                            h2,
-                            ch2,
-                            float(sums[0]) / n,
-                            float(sums[1]) / n,
-                            float(sums[2]) / n,
-                            None,
-                        )
-                    )
-                except (ValueError, NotImplementedError) as ex:
-                    rows.append(
-                        (asset_id, None, None, None, None, None, None,
-                         str(ex)[:80])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "width",
-                    "height",
-                    "n_channels",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                    "err",
-                ],
-            )
+    def stats(raw: bytes) -> tuple:
+        w, h, ch, px = P.parse_png(raw)
+        small = px[::factor, ::factor, :]
+        if small.size == 0:
+            raise ValueError("resize factor exceeds image")
+        re_raw = P.encode_png(small, filters=(2, 4))
+        w2, h2, ch2, px2 = P.parse_png(re_raw)
+        n = w2 * h2
+        sums = px2[:, :, :3].reshape(n, 3).astype("int64").sum(axis=0)
+        return (w2, h2, ch2, *(float(v) / n for v in sums))
 
-    return df.select("asset_id", "payload").mapInPandas(
-        fn, _RESIZE_PNG_SCHEMA
+    return _map_assets(
+        df.select("asset_id", "payload"), stats, _RESIZE_PNG_SCHEMA
     )
 
 
@@ -1796,43 +1644,20 @@ def gif_index_histogram(df: DataFrame) -> DataFrame:
         gif as G,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, pal, idx = G.parse_gif(raw)
-                    counts = np.bincount(idx.ravel(), minlength=len(pal))
-                    modal = int(np.argmax(counts))  # argmax → lowest tie
-                    rows.append(
-                        (
-                            asset_id,
-                            int((counts > 0).sum()),
-                            modal,
-                            int(counts[modal]),
-                            int(pal[modal][0]),
-                            int(pal[modal][1]),
-                            int(pal[modal][2]),
-                            None,
-                        )
-                    )
-                except (ValueError, NotImplementedError) as ex:
-                    rows.append(
-                        (asset_id, None, None, None, None, None, None,
-                         str(ex)[:80])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "n_distinct_idx", "modal_idx",
-                    "modal_count", "modal_r", "modal_g", "modal_b", "err",
-                ],
-            )
+    def stats(raw: bytes) -> tuple:
+        w, h, pal, idx = G.parse_gif(raw)
+        counts = np.bincount(idx.ravel(), minlength=len(pal))
+        modal = int(np.argmax(counts))  # argmax → lowest tie
+        return (
+            int((counts > 0).sum()),
+            modal,
+            int(counts[modal]),
+            *(int(c) for c in pal[modal][:3]),
+        )
 
-    return df.mapInPandas(fn, _GIF_HISTOGRAM_SCHEMA)
+    return _map_assets(df, stats, _GIF_HISTOGRAM_SCHEMA)
 
 
 _GIF_REMAP_SCHEMA = (
@@ -1856,54 +1681,26 @@ def gif_palette_remap_reencode(df: DataFrame) -> DataFrame:
         gif as G,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, pal, idx = G.parse_gif(raw)
-                    used = np.unique(idx)
-                    remap = np.zeros(len(pal), dtype=np.uint8)
-                    remap[used] = np.arange(len(used), dtype=np.uint8)
-                    new_idx = remap[idx]
-                    new_pal = pal[used]
-                    out = G.encode_gif87a(new_idx, new_pal)
-                    w2, h2, pal2, idx2 = G.parse_gif(out)
-                    if not np.array_equal(
-                        pal2[idx2.ravel()], pal[idx.ravel()]
-                    ):
-                        raise ValueError("remap changed pixels")
-                    rgb = pal[idx.ravel()].astype("int64")
-                    n = w * h
-                    sums = rgb.sum(axis=0)
-                    rows.append(
-                        (
-                            asset_id,
-                            int(len(pal)),
-                            int(len(new_pal)),
-                            int(len(raw)),
-                            int(len(out)),
-                            float(sums[0]) / n,
-                            float(sums[1]) / n,
-                            float(sums[2]) / n,
-                            None,
-                        )
-                    )
-                except (ValueError, NotImplementedError) as ex:
-                    rows.append(
-                        (asset_id, None, None, None, None, None, None,
-                         None, str(ex)[:80])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "n_colors_before", "n_colors_after",
-                    "bytes_before", "bytes_after", "mean_r", "mean_g",
-                    "mean_b", "err",
-                ],
-            )
+    def stats(raw: bytes) -> tuple:
+        w, h, pal, idx = G.parse_gif(raw)
+        used = np.unique(idx)
+        remap = np.zeros(len(pal), dtype=np.uint8)
+        remap[used] = np.arange(len(used), dtype=np.uint8)
+        new_pal = pal[used]
+        out = G.encode_gif87a(remap[idx], new_pal)
+        w2, h2, pal2, idx2 = G.parse_gif(out)
+        if not np.array_equal(pal2[idx2.ravel()], pal[idx.ravel()]):
+            raise ValueError("remap changed pixels")
+        sums = pal[idx.ravel()].astype("int64").sum(axis=0)
+        n = w * h
+        return (
+            int(len(pal)),
+            int(len(new_pal)),
+            int(len(raw)),
+            int(len(out)),
+            *(float(v) / n for v in sums),
+        )
 
-    return df.mapInPandas(fn, _GIF_REMAP_SCHEMA)
+    return _map_assets(df, stats, _GIF_REMAP_SCHEMA)

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 # Exact, order-independent aggregation of doubles: route through
 # DECIMAL(38,6). The fixture money/measure columns carry ≤2 true decimal
@@ -32,6 +32,33 @@ def sql_davg(expr: str, alias: str) -> str:
     return (
         f"CAST(SUM(CAST(({expr}) AS DECIMAL(38,6))) AS DOUBLE)"
         f" / COUNT({expr}) AS {alias}"
+    )
+
+
+def daily_revenue(orders: DataFrame, alias: str) -> DataFrame:
+    """``(day, <alias>)``: each order date's exact (decimal-routed)
+    ``o_totalprice`` sum, as double."""
+    return orders.groupBy(
+        F.col("o_orderdate").cast("date").alias("day")
+    ).agg(dsum(F.col("o_totalprice"), alias))
+
+
+def session_seq() -> Column:
+    """Per-user session number of each ``events`` row under the 30-minute
+    gap rule: gaps-and-islands over ``(ts, event_id)`` order, where a
+    user's first event and every event at least 30 minutes after the
+    previous one start a new session (numbered from 1). Batch only: a
+    ``lag`` window cannot run on a stream (``streaming.windows`` has the
+    streaming ``session_window`` form)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev = F.lag("ts").over(w)
+    new_session = F.when(
+        prev.isNull()
+        | (F.unix_micros("ts") - F.unix_micros(prev) >= 1800 * 1_000_000),
+        1,
+    ).otherwise(0)
+    return F.sum(new_session).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
 
 

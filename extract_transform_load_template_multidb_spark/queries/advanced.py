@@ -20,6 +20,7 @@ from extract_transform_load_template_multidb_spark.operators import (
 from extract_transform_load_template_multidb_spark.queries import query
 from extract_transform_load_template_multidb_spark.queries._util import (
     DEC,
+    daily_revenue,
     dsum,
     exact_percentiles,
     exact_percentiles_from_counts,
@@ -4313,6 +4314,54 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lineitem_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row of the ten sufficient statistics of lineitem's (quantity,
+    extendedprice, discount) = (q, p, d): ``n`` and the decimal-exact sums
+    ``sq sp sd sqq sqp sqd spp spd sdd``, in one fact pass (2-decimal
+    measures keep every product on the 6-dp grid)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    q, p, d = (
+        F.col("l_quantity"),
+        F.col("l_extendedprice"),
+        F.col("l_discount"),
+    )
+    # The exact-decimal partial aggregate runs on the scan's partitioning,
+    # and the fixture is ONE parquet split — the whole pass would serialize
+    # onto one core. Fan the 3-column projection over the session's cores
+    # first (_fan_out is a gated no-op at cluster scale).
+    return _fan_out(
+        li.select("l_quantity", "l_extendedprice", "l_discount")
+    ).agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        dsum(q, "sq"),
+        dsum(p, "sp"),
+        dsum(d, "sd"),
+        dsum(q * q, "sqq"),
+        dsum(q * p, "sqp"),
+        dsum(q * d, "sqd"),
+        dsum(p * p, "spp"),
+        dsum(p * d, "spd"),
+        dsum(d * d, "sdd"),
+    )
+
+
+def _moment_covariances() -> list:
+    """The sample covariances ``c11 c12 c13 c22 c23 c33`` of a
+    :func:`_lineitem_moments` row (1 = q, 2 = p, 3 = d)."""
+    n = F.col("n")
+    return [
+        ((F.col(sab) - F.col(sa) * F.col(sb) / n) / (n - 1)).alias(name)
+        for name, sab, sa, sb in (
+            ("c11", "sqq", "sq", "sq"),
+            ("c12", "sqp", "sq", "sp"),
+            ("c13", "sqd", "sq", "sd"),
+            ("c22", "spp", "sp", "sp"),
+            ("c23", "spd", "sp", "sd"),
+            ("c33", "sdd", "sd", "sd"),
+        )
+    ]
+
+
 _COV_MATRIX_ORACLE = """
 WITH s AS (
     SELECT CAST(COUNT(*) AS DOUBLE) AS n,
@@ -4358,31 +4407,7 @@ def agg_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulate exactly in DECIMAL in ONE fact pass (2-decimal measures ⇒
     products stay on the 6-dp grid); each covariance is then a fixed
     IEEE dag — bit-identical with no second pass and no rounding."""
-    li = load_table(spark, sf_dir, "lineitem")
-    q, p, d = (
-        F.col("l_quantity"),
-        F.col("l_extendedprice"),
-        F.col("l_discount"),
-    )
-    dec = lambda c: F.sum(c.cast("decimal(38,6)")).cast("double")
-    # Round-11: the exact-decimal partial aggregate runs on the scan's
-    # partitioning, and the fixture is ONE parquet split — the whole sums
-    # pass serialized onto one core. Fan the 3-column projection over the
-    # session's cores first (_fan_out is a gated no-op at cluster scale).
-    s = _fan_out(
-        li.select("l_quantity", "l_extendedprice", "l_discount")
-    ).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dec(q).alias("sq"),
-        dec(p).alias("sp"),
-        dec(d).alias("sd"),
-        dec(q * q).alias("sqq"),
-        dec(q * p).alias("sqp"),
-        dec(q * d).alias("sqd"),
-        dec(p * p).alias("spp"),
-        dec(p * d).alias("spd"),
-        dec(d * d).alias("sdd"),
-    )
+    s = _lineitem_moments(spark, sf_dir)
     combos = [
         ("quantity", "quantity", "sq", "sq", "sqq"),
         ("quantity", "extendedprice", "sq", "sp", "sqp"),
@@ -4518,52 +4543,8 @@ def agg_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     so loadings, eigenvalue, and explained-variance share are
     bit-identical. Sign fixed by forcing the first loading positive.
     At scale only the sufficient-statistics pass touches data."""
-    li = load_table(spark, sf_dir, "lineitem")
-    q, p, d = (
-        F.col("l_quantity"),
-        F.col("l_extendedprice"),
-        F.col("l_discount"),
-    )
-    dec = lambda c: F.sum(c.cast("decimal(38,6)")).cast("double")
-    # Round-11: the exact-decimal partial aggregate runs on the scan's
-    # partitioning, and the fixture is ONE parquet split — the whole sums
-    # pass serialized onto one core. Fan the 3-column projection over the
-    # session's cores first (_fan_out is a gated no-op at cluster scale).
-    s = _fan_out(
-        li.select("l_quantity", "l_extendedprice", "l_discount")
-    ).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dec(q).alias("sq"),
-        dec(p).alias("sp"),
-        dec(d).alias("sd"),
-        dec(q * q).alias("sqq"),
-        dec(q * p).alias("sqp"),
-        dec(q * d).alias("sqd"),
-        dec(p * p).alias("spp"),
-        dec(p * d).alias("spd"),
-        dec(d * d).alias("sdd"),
-    )
-    n = F.col("n")
-    cov = s.select(
-        ((F.col("sqq") - F.col("sq") * F.col("sq") / n) / (n - 1)).alias(
-            "c11"
-        ),
-        ((F.col("sqp") - F.col("sq") * F.col("sp") / n) / (n - 1)).alias(
-            "c12"
-        ),
-        ((F.col("sqd") - F.col("sq") * F.col("sd") / n) / (n - 1)).alias(
-            "c13"
-        ),
-        ((F.col("spp") - F.col("sp") * F.col("sp") / n) / (n - 1)).alias(
-            "c22"
-        ),
-        ((F.col("spd") - F.col("sp") * F.col("sd") / n) / (n - 1)).alias(
-            "c23"
-        ),
-        ((F.col("sdd") - F.col("sd") * F.col("sd") / n) / (n - 1)).alias(
-            "c33"
-        ),
-    )
+    s = _lineitem_moments(spark, sf_dir)
+    cov = s.select(*_moment_covariances())
     it = cov.select(
         "*",
         (F.lit(1.0) / F.sqrt(F.lit(3.0))).alias("v1"),
@@ -4704,48 +4685,13 @@ def agg_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice"),
         F.col("l_discount"),
     )
-    dec = lambda c: F.sum(c.cast("decimal(38,6)")).cast("double")
-    # Round-11: the exact-decimal partial aggregate runs on the scan's
-    # partitioning, and the fixture is ONE parquet split — the whole sums
-    # pass serialized onto one core. Fan the 3-column projection over the
-    # session's cores first (_fan_out is a gated no-op at cluster scale).
-    s = _fan_out(
-        li.select("l_quantity", "l_extendedprice", "l_discount")
-    ).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dec(q).alias("sq"),
-        dec(p).alias("sp"),
-        dec(d).alias("sd"),
-        dec(q * q).alias("sqq"),
-        dec(q * p).alias("sqp"),
-        dec(q * d).alias("sqd"),
-        dec(p * p).alias("spp"),
-        dec(p * d).alias("spd"),
-        dec(d * d).alias("sdd"),
-    )
+    s = _lineitem_moments(spark, sf_dir)
     n = F.col("n")
     cov = s.select(
         (F.col("sq") / n).alias("m1"),
         (F.col("sp") / n).alias("m2"),
         (F.col("sd") / n).alias("m3"),
-        ((F.col("sqq") - F.col("sq") * F.col("sq") / n) / (n - 1)).alias(
-            "c11"
-        ),
-        ((F.col("sqp") - F.col("sq") * F.col("sp") / n) / (n - 1)).alias(
-            "c12"
-        ),
-        ((F.col("sqd") - F.col("sq") * F.col("sd") / n) / (n - 1)).alias(
-            "c13"
-        ),
-        ((F.col("spp") - F.col("sp") * F.col("sp") / n) / (n - 1)).alias(
-            "c22"
-        ),
-        ((F.col("spd") - F.col("sp") * F.col("sd") / n) / (n - 1)).alias(
-            "c23"
-        ),
-        ((F.col("sdd") - F.col("sd") * F.col("sd") / n) / (n - 1)).alias(
-            "c33"
-        ),
+        *_moment_covariances(),
     )
     c11, c12, c13 = F.col("c11"), F.col("c12"), F.col("c13")
     c22, c23, c33 = F.col("c22"), F.col("c23"), F.col("c33")
@@ -4861,39 +4807,16 @@ def agg_ols_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     R² falls out of the same sums — no MLlib, no second data pass,
     bit-identical coefficients cross-engine. The multivariate upgrade
     of `agg_linear_trend`."""
-    li = load_table(spark, sf_dir, "lineitem")
-    x1, x2, y = (
-        F.col("l_quantity"),
-        F.col("l_discount"),
-        F.col("l_extendedprice"),
-    )
-    dec = lambda c: F.sum(c.cast("decimal(38,6)")).cast("double")
-    # Round-11: the exact-decimal partial aggregate runs on the scan's
-    # partitioning, and the fixture is ONE parquet split — the whole sums
-    # pass serialized onto one core. Fan the 3-column projection over the
-    # session's cores first (_fan_out is a gated no-op at cluster scale).
-    s = _fan_out(
-        li.select("l_quantity", "l_extendedprice", "l_discount")
-    ).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dec(x1).alias("sx1"),
-        dec(x2).alias("sx2"),
-        dec(y).alias("sy"),
-        dec(x1 * x1).alias("s11"),
-        dec(x1 * x2).alias("s12"),
-        dec(x2 * x2).alias("s22"),
-        dec(x1 * y).alias("s1y"),
-        dec(x2 * y).alias("s2y"),
-        dec(y * y).alias("syy"),
-    )
-    g11, g12, g13 = F.col("n"), F.col("sx1"), F.col("sx2")
-    g22, g23, g33 = F.col("s11"), F.col("s12"), F.col("s22")
+    # x1 = quantity (q), x2 = discount (d), y = extendedprice (p).
+    s = _lineitem_moments(spark, sf_dir)
+    g11, g12, g13 = F.col("n"), F.col("sq"), F.col("sd")
+    g22, g23, g33 = F.col("sqq"), F.col("sqd"), F.col("sdd")
     det = (
         g11 * (g22 * g33 - g23 * g23)
         + g12 * (g13 * g23 - g12 * g33)
         + g13 * (g12 * g23 - g13 * g22)
     )
-    sy, s1y, s2y = F.col("sy"), F.col("s1y"), F.col("s2y")
+    sy, s1y, s2y = F.col("sp"), F.col("sqp"), F.col("spd")
     b0 = (
         (g22 * g33 - g23 * g23) * sy
         + (g13 * g23 - g12 * g33) * s1y
@@ -4916,8 +4839,8 @@ def agg_ols_two_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         b2.alias("coef_discount"),
         (
             1
-            - (F.col("syy") - b0 * sy - b1 * s1y - b2 * s2y)
-            / (F.col("syy") - sy * sy / F.col("n"))
+            - (F.col("spp") - b0 * sy - b1 * s1y - b2 * s2y)
+            / (F.col("spp") - sy * sy / F.col("n"))
         ).alias("r_squared"),
     )
 
@@ -7246,12 +7169,7 @@ def agg_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the same series."""
     from pyspark.sql import Window as Win
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("rev")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "rev")
     w = Win.orderBy("day")
     seq = daily.select(
         "day",
@@ -7877,12 +7795,7 @@ def agg_friedman_weekday_test(
     before one final double dag; 6-df critical value flags at 0.05."""
     from pyspark.sql import Window as Win
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("y")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     wk = daily.select(
         "day",
         "y",
@@ -8475,10 +8388,7 @@ def agg_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row moments pass (Σy, Σy² decimal-routed — daily sums sit on
     the 2-dp grid so squares are exact at 4 dp) broadcast back, and a
     TakeOrdered(1) argmax: three tiny exchanges at any scale."""
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(dsum(F.col("o_totalprice"), "y"))
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     s = daily.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         dsum(F.col("y"), "s1"),
@@ -8966,30 +8876,7 @@ def agg_vif_multicollinearity(
     the whole diagnostic is ONE decimal-routed moments pass (the same
     10 sums as `agg_covariance_matrix`) plus constant scalar algebra —
     no per-feature regression passes, nothing driver-side."""
-    li = load_table(spark, sf_dir, "lineitem")
-    q, p, d = (
-        F.col("l_quantity"),
-        F.col("l_extendedprice"),
-        F.col("l_discount"),
-    )
-    # Round-11: the exact-decimal partial aggregate runs on the scan's
-    # partitioning, and the fixture is ONE parquet split — the whole sums
-    # pass serialized onto one core. Fan the 3-column projection over the
-    # session's cores first (_fan_out is a gated no-op at cluster scale).
-    s = _fan_out(
-        li.select("l_quantity", "l_extendedprice", "l_discount")
-    ).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dsum(q, "sq"),
-        dsum(p, "sp"),
-        dsum(d, "sd"),
-        dsum(q * q, "sqq"),
-        dsum(q * p, "sqp"),
-        dsum(q * d, "sqd"),
-        dsum(p * p, "spp"),
-        dsum(p * d, "spd"),
-        dsum(d * d, "sdd"),
-    )
+    s = _lineitem_moments(spark, sf_dir)
 
     def corr(sab, sa, sb, saa, sbb):
         n = F.col("n")

@@ -15,7 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from extract_transform_load_template_multidb_spark.catalog import load_table
 from extract_transform_load_template_multidb_spark.queries import query
 from extract_transform_load_template_multidb_spark.queries._util import (
+    daily_revenue,
     exact_percentiles,
+    session_seq,
 )
 from extract_transform_load_template_multidb_spark.streaming import windows as W
 
@@ -431,27 +433,12 @@ def window_session_gap_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     only aggregates per session. One shuffle by user; both windows share
     the same (ts, event_id) total order so the exchange and sort are
     reused."""
-    from pyspark.sql import Window as W, functions as F
-
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = 1800 * 1_000_000
-    new_session = F.when(
-        F.lag("ts").over(w).isNull()
-        | (
-            F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-            >= gap_us
-        ),
-        1,
-    ).otherwise(0)
     return ev.select(
         "user_id",
         "event_id",
         "ts",
-        F.sum(new_session)
-        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .cast("long")
-        .alias("session_seq"),
+        session_seq().cast("long").alias("session_seq"),
     )
 
 
@@ -772,25 +759,13 @@ def ts_session_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions containing a purchase, report converted/total — the product
     metric sessionization exists to serve. All three windows and both
     rollups ride ONE user_id exchange."""
-    from pyspark.sql import Window as W, functions as F
+    from pyspark.sql import functions as F
 
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = 1800 * 1_000_000
-    new_session = F.when(
-        F.lag("ts").over(w).isNull()
-        | (
-            F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-            >= gap_us
-        ),
-        1,
-    ).otherwise(0)
     sessions = ev.select(
         "user_id",
         "event_type",
-        F.sum(new_session)
-        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .alias("session_seq"),
+        session_seq().alias("session_seq"),
     )
     per_session = sessions.groupBy("user_id", "session_seq").agg(
         F.max(
@@ -1378,22 +1353,10 @@ def ts_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W, functions as F
 
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = 1800 * 1_000_000
-    new_session = F.when(
-        F.lag("ts").over(w).isNull()
-        | (
-            F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-            >= gap_us
-        ),
-        1,
-    ).otherwise(0)
     sessions = ev.select(
         "user_id",
         "ts",
-        F.sum(new_session)
-        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .alias("seq"),
+        session_seq().alias("seq"),
     )
     bounds = sessions.groupBy("user_id", "seq").agg(
         F.min("ts").alias("s_start"),
@@ -1610,14 +1573,7 @@ def ts_ewma_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan runs per entity key with partitionBy."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("rev_usd")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "rev_usd")
     seq = daily.withColumn(
         "rn", F.row_number().over(Win.orderBy("day")).cast("double")
     )
@@ -1765,14 +1721,7 @@ def ts_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any history length."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("rev")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "rev")
     w_ord = Win.orderBy("day")
     w_c = w_ord.rowsBetween(-14, 14)
     seq = daily.select(
@@ -1858,24 +1807,12 @@ def ts_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`window_session_gap_ids`'s assignment, rolled up twice). One
     user-keyed shuffle does the sessionization; the rollups are exact
     integer counts with two correctly-rounded final divisions."""
-    from pyspark.sql import Window as W, functions as F
+    from pyspark.sql import functions as F
 
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = 1800 * 1_000_000
-    new_session = F.when(
-        F.lag("ts").over(w).isNull()
-        | (
-            F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-            >= gap_us
-        ),
-        1,
-    ).otherwise(0)
     sess = ev.select(
         "user_id",
-        F.sum(new_session)
-        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .alias("session_seq"),
+        session_seq().alias("session_seq"),
     )
     per_sess = sess.groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).cast("long").alias("n_events")
@@ -2180,14 +2117,7 @@ def ts_fourier_top_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as Win, functions as F
     import math
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("rev")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "rev")
     seq = daily.select(
         "rev",
         (F.row_number().over(Win.orderBy("day")) - 1)
@@ -2416,24 +2346,12 @@ def ts_session_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W, functions as F
 
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = 1800 * 1_000_000
-    new_session = F.when(
-        F.lag("ts").over(w).isNull()
-        | (
-            F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-            >= gap_us
-        ),
-        1,
-    ).otherwise(0)
     sess = ev.select(
         "user_id",
         "event_id",
         "ts",
         "event_type",
-        F.sum(new_session)
-        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .alias("session_seq"),
+        session_seq().alias("session_seq"),
     )
     w2 = W.partitionBy("user_id", "session_seq").orderBy("ts", "event_id")
     tri = sess.select(
@@ -2518,24 +2436,12 @@ def ts_multi_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W, functions as F
 
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = 1800 * 1_000_000
-    new_session = F.when(
-        F.lag("ts").over(w).isNull()
-        | (
-            F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-            >= gap_us
-        ),
-        1,
-    ).otherwise(0)
     sess = ev.select(
         "user_id",
         "event_id",
         "ts",
         "event_type",
-        F.sum(new_session)
-        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .alias("s"),
+        session_seq().alias("s"),
     )
     ws = W.partitionBy("user_id", "s")
     with_p = sess.withColumn(
@@ -3951,14 +3857,7 @@ def ts_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("rev_usd")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "rev_usd")
     seq = daily.withColumn(
         "rn", F.row_number().over(Win.orderBy("day")).cast("double")
     )
@@ -4364,14 +4263,7 @@ def ts_holt_winters_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded closed-form EWMA; the 7-row index table broadcasts."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("rev_usd")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "rev_usd")
     wfull = Win.orderBy("day").rowsBetween(-3, 3)
     seq = daily.select(
         "day",
@@ -4714,14 +4606,7 @@ def ts_interrupted_time_series(
     iteration."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("y")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     seq = daily.select(
         "y",
         F.row_number().over(Win.orderBy("day")).cast("long").alias("t"),
@@ -4823,14 +4708,7 @@ def ts_seasonal_naive_skill(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("y")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     w = Win.orderBy("day")
     seq = daily.select(
         "y",
@@ -4923,14 +4801,7 @@ def ts_seasonal_residual_anomalies(
     broadcast of the 1-row scale against the bounded daily series."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("y")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     wfull = Win.orderBy("day").rowsBetween(-3, 3)
     seq = daily.select(
         "day",
@@ -5110,14 +4981,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-identical."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("y")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     wfull = Win.orderBy("day").rowsBetween(-3, 3)
     seq = daily.select(
         "day",
@@ -5736,14 +5600,7 @@ def ts_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumsum is one window; argmax is TakeOrdered."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("y")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     vc = daily.groupBy("y").agg(F.count(F.lit(1)).cast("long").alias("l"))
     rk = vc.select(
         "y",
@@ -5868,14 +5725,7 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the fact table then constant-size frames."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("rev")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "rev")
     seq = daily.select(
         "rev",
         (F.row_number().over(Win.orderBy("day")) - 1)
@@ -6077,14 +5927,7 @@ def ts_peak_prominence(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums; top-5 is a TakeOrdered."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("y")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     wd = Win.orderBy("day")
     w = daily.select(
         "day",
@@ -6592,14 +6435,7 @@ def ts_haar_wavelet_energy(
     touched once."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("y")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     idx = daily.select(
         F.round("y", 2).cast("decimal(38,2)").alias("a"),
         (F.row_number().over(Win.orderBy("day")) - 1)
@@ -7107,10 +6943,7 @@ def ts_western_electric_rules(
         dsum,
     )
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(dsum(F.col("o_totalprice"), "y"))
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     s = daily.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         dsum(F.col("y"), "s1"),
@@ -7203,14 +7036,7 @@ def window_rolling_ols_slope(
     so every slope is a full-window estimate."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("y")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     idx = daily.select(
         "day",
         "y",
@@ -7295,14 +7121,7 @@ def ts_record_breaking_days(
     window is near-empty). All comparisons on the exact 2-dp grid."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("y")
-    )
+    daily = daily_revenue(load_table(spark, sf_dir, "orders"), "y")
     wd = Win.orderBy("day")
     run = daily.select(
         "day",
@@ -7515,13 +7334,8 @@ def ts_binary_segmentation_pettitt(
     distributed throughout."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("y")
+    daily = daily_revenue(
+        load_table(spark, sf_dir, "orders"), "y"
     ).localCheckpoint(eager=True)
 
     def pettitt_pick(seg, tag):
@@ -7737,13 +7551,8 @@ def ts_max_drawdown_demeaned(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized at 2 dp so the cumulative decimal sums are exact."""
     from pyspark.sql import Window as Win, functions as F
 
-    o = load_table(spark, sf_dir, "orders")
-    daily = o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("y")
+    daily = daily_revenue(
+        load_table(spark, sf_dir, "orders"), "y"
     ).localCheckpoint(eager=True)
     mean = daily.agg(
         (

@@ -38,21 +38,27 @@ _MEMO_BOUND = 512
 _MEMO_LOCK = threading.Lock()
 
 
-def memo_get(memo: dict, key, spark: SparkSession):
-    """The value ``memo_put`` stored under ``key`` for this very session
-    object, else None."""
+def session_key(spark: SparkSession) -> str:
+    """The UUID of the JVM session behind ``spark``, the first element of
+    every per-session memo key. pyspark wraps one JVM session in a new
+    Python object per ``foreachBatch`` micro-batch, so the wrapper's
+    ``id()`` would miss the memo on every batch."""
+    return spark._jsparkSession.sessionUUID()
+
+
+def memo_get(memo: dict, key):
+    """The value ``memo_put`` stored under ``key``, else None."""
     hit = memo.get(key)
-    return hit[1] if hit is not None and hit[0] is spark else None
+    return hit[1] if hit is not None else None
 
 
 def memo_put(memo: dict, key, spark: SparkSession, value) -> None:
     """Store ``value`` under ``key`` for ``spark``.
 
-    The entry keeps the session object alive, so a collected session's
-    ``id()`` can never alias a live one. So that a memo does not hold every
-    session for the life of the process, entries of sessions whose context
-    has stopped are dropped first, and a memo past ``_MEMO_BOUND`` entries
-    is cleared.
+    The entry keeps ``spark`` so that stopped sessions can be found: so
+    that a memo does not hold every session for the life of the process,
+    entries of sessions whose context has stopped are dropped first, and a
+    memo past ``_MEMO_BOUND`` entries is cleared.
     """
     with _MEMO_LOCK:
         for k in [k for k, (s, _) in memo.items() if s.sparkContext._jsc is None]:
@@ -67,7 +73,7 @@ def memo_put(memo: dict, key, spark: SparkSession, value) -> None:
 # round-trips per call are pure per-query driver latency once the session
 # is configured — the engine never unsets these keys, so applying them
 # once per session is equivalent (round-12: the 526-query tail is
-# driver-latency bound). Keyed by id(), through memo_get/memo_put.
+# driver-latency bound). Keyed by session_key, through memo_get/memo_put.
 _CONF_APPLIED: dict = {}
 
 
@@ -76,10 +82,11 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
 
     The correctness driver constructs its own SparkSession; every public
     query entry point funnels through here so behavior does not depend on
-    who built the session. Idempotent and memoized per session object:
-    repeat calls are a dict lookup, not six py4j round-trips.
+    who built the session. Idempotent and memoized per JVM session:
+    repeat calls are one py4j round-trip and a dict lookup, not six.
     """
-    if memo_get(_CONF_APPLIED, id(spark), spark):
+    key = session_key(spark)
+    if memo_get(_CONF_APPLIED, key):
         return spark
     for k, v in _RUNTIME_CONF.items():
         try:
@@ -87,7 +94,7 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
         except Exception:
             # Static conf on this build — keep going; defaults are sane.
             pass
-    memo_put(_CONF_APPLIED, id(spark), spark, True)
+    memo_put(_CONF_APPLIED, key, spark, True)
     return spark
 
 

@@ -180,15 +180,17 @@ def test_memos_drop_entries_of_stopped_sessions(spark, tmp_path):
     read_files(spark, str(part))
     live = SimpleNamespace(
         sparkContext=SimpleNamespace(_jsc=object()),
+        _jsparkSession=SimpleNamespace(sessionUUID=lambda: "live-stub"),
         conf=SimpleNamespace(set=lambda k, v: None),
     )
     try:
         session.ensure_conf(live)
         for memo in memos:
             assert "stale" not in memo
-        assert session.memo_get(session._CONF_APPLIED, id(spark), spark)
+        key = session.session_key(spark)
+        assert session.memo_get(session._CONF_APPLIED, key)
     finally:
-        session._CONF_APPLIED.pop(id(live), None)
+        session._CONF_APPLIED.pop("live-stub", None)
 
 
 def test_memo_put_is_safe_under_concurrent_inserts():

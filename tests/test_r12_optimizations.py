@@ -61,7 +61,6 @@ def test_fan_out_noop_above_byte_threshold(spark, pq_docs):
     """At >= cores x advisory bytes the gate is a no-op (cluster-scale
     posture: never force a shuffle of a frame that already spreads)."""
     old = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    dd._ADVISORY_BYTES.clear()
     try:
         spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1b")
         out = dd._fan_out(pq_docs.select("doc_id", "text"))
@@ -72,7 +71,26 @@ def test_fan_out_noop_above_byte_threshold(spark, pq_docs):
         spark.conf.set(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes", old
         )
-        dd._ADVISORY_BYTES.clear()
+
+
+def test_fan_out_gate_reads_advisory_size_on_each_call(spark, pq_docs):
+    """The gate follows the session's current advisory partition size:
+    changing it between two calls on one session flips the decision."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+
+    def fans_out():
+        out = dd._fan_out(pq_docs.select("doc_id", "text"))
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return "Repartition" in plan
+
+    try:
+        spark.conf.set(key, "1g")
+        assert fans_out()
+        spark.conf.set(key, "1b")
+        assert not fans_out()
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_fan_out_unknown_stats_is_noop(spark, docs):

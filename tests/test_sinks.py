@@ -15,6 +15,7 @@ from pyspark.sql import Row, functions as F
 
 from extract_transform_load_template_multidb_spark import catalog
 from extract_transform_load_template_multidb_spark.catalog import read_files
+from extract_transform_load_template_multidb_spark.session import session_key
 from extract_transform_load_template_multidb_spark.sinks import ParquetSink
 
 CUTOFF = dt.datetime(2024, 3, 1)
@@ -235,7 +236,8 @@ def test_append_records_no_schema(spark, tmp_path):
     sink.append(
         spark.createDataFrame([(2, "b", 1.5)], "id bigint, s string, extra double")
     )
-    key = (id(spark), "parquet", sink.path, (), catalog._flat_stamp(sink.path))
+    stamp = catalog._flat_stamp(sink.path)
+    key = (session_key(spark), "parquet", sink.path, (), stamp)
     assert key not in catalog._SCHEMA_MEMO
     got = read_files(spark, sink.path)
     assert got.schema.json() == spark.read.parquet(sink.path).schema.json()

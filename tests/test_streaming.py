@@ -11,7 +11,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from extract_transform_load_template_multidb_spark import catalog
 from extract_transform_load_template_multidb_spark.catalog import load_table
+from extract_transform_load_template_multidb_spark.queries._util import (
+    session_seq,
+)
 from extract_transform_load_template_multidb_spark.sinks.parquet_sink import (
     ParquetSink,
 )
@@ -186,6 +190,66 @@ def test_available_now_upsert(spark, tmp_path):
         (r["k"], r["v"]) for r in spark.read.parquet(target.path).collect()
     }
     assert got == {(1, "old"), (2, "new"), (3, "new")}
+
+
+def test_available_now_upsert_hits_schema_memo_across_batches(
+    spark, tmp_path, monkeypatch
+):
+    """pyspark hands each ``foreachBatch`` call a new SparkSession object
+    over the same JVM session: the target's schema, recorded by one
+    micro-batch's write, must still be a memo hit in the next one."""
+    landing = str(tmp_path / "landing_memo")
+    target = ParquetSink(str(tmp_path / "target_memo"))
+    schema = spark.createDataFrame([], "k bigint, v string").schema
+    for i in range(3):
+        spark.createDataFrame([(i, "a"), (i + 1, "b")], schema).coalesce(
+            1
+        ).write.mode("append").parquet(landing)
+    hits = []
+    real_get = catalog.memo_get
+
+    def spy(memo, key, *rest):
+        hit = real_get(memo, key, *rest)
+        if memo is catalog._SCHEMA_MEMO and key[2] == target.path:
+            hits.append(hit is not None)
+        return hit
+
+    monkeypatch.setattr(catalog, "memo_get", spy)
+    stream = inc.read_file_stream(
+        spark, landing, schema, max_files_per_trigger=1
+    )
+    inc.run_available_now(
+        stream, target, str(tmp_path / "ckpt_memo"), mode="upsert",
+        keys=("k",),
+    )
+    # Three micro-batches: the first creates the target, the next two
+    # read it, and at most one of those reads may infer.
+    assert len(hits) == 2
+    assert hits.count(False) <= 1
+    got = spark.read.parquet(target.path)
+    assert sorted(r["k"] for r in got.collect()) == [0, 1, 2, 3]
+
+
+def test_session_seq_gap_boundaries(spark):
+    """The 30-minute rule: a gap of exactly 30 min starts a new session,
+    30 min − 1 µs does not, equal timestamps share a session, and a
+    user's first event is session 1."""
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    half = dt.timedelta(minutes=30)
+    us = dt.timedelta(microseconds=1)
+    rows = [
+        (1, 1, t0),
+        (1, 2, t0 + half),  # exactly 30 min: new session
+        (1, 3, t0 + half + half - us),  # 30 min − 1 µs: same session
+        (1, 4, t0 + half + half - us),  # equal ts: same session
+        (2, 5, t0 + half),  # another user's first event
+    ]
+    ev = spark.createDataFrame(rows, "user_id int, event_id int, ts timestamp")
+    got = {
+        r["event_id"]: r["s"]
+        for r in ev.select("event_id", session_seq().alias("s")).collect()
+    }
+    assert got == {1: 1, 2: 2, 3: 2, 4: 2, 5: 1}
 
 
 def test_available_now_window_overwrite_idempotent(spark, tmp_path):
