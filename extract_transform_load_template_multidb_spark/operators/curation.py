@@ -66,6 +66,11 @@ def hash_bucket(key: Column, buckets: int = 100) -> Column:
     return F.pmod(h, F.lit(buckets))
 
 
+def _check_pct(name: str, pct: float) -> None:
+    if not 0 <= pct <= 100:
+        raise ValueError(f"{name}={pct} must be in [0, 100]")
+
+
 def hash_sample(
     df: DataFrame, pct: int, key_col: str = "doc_id"
 ) -> DataFrame:
@@ -74,7 +79,7 @@ def hash_sample(
     A narrow filter — the predicate reaches the scan, no shuffle, and the
     same rows are selected on every engine and every rerun.
     """
-    assert 0 <= pct <= 100
+    _check_pct("pct", pct)
     return df.filter(hash_bucket(F.col(key_col)) < pct)
 
 
@@ -94,7 +99,7 @@ def stratified_sample(
     """
     pct = F.lit(default_pct)
     for stratum, p in sorted(fractions.items()):
-        assert 0 <= p <= 100
+        _check_pct(f"fractions[{stratum!r}]", p)
         pct = F.when(F.col(strata_col) == stratum, F.lit(p)).otherwise(pct)
     salted = F.concat(
         F.col(strata_col).cast("string"),
@@ -117,7 +122,7 @@ def group_split(
     marks near-duplicate clusters or a shared source/site — every member
     lands on the same side. Narrow map, no shuffle.
     """
-    assert 0 <= test_pct <= 100
+    _check_pct("test_pct", test_pct)
     return df.withColumn(
         "split",
         F.when(
@@ -143,7 +148,8 @@ def chunk_documents(
     shape.
     """
     stride = chunk_tokens - overlap
-    assert stride > 0, "overlap must be smaller than chunk_tokens"
+    if stride <= 0:
+        raise ValueError("overlap must be smaller than chunk_tokens")
     toks = tokenize(F.col(text_col))
     starts = F.when(
         F.size(toks) > 0,
@@ -426,7 +432,8 @@ def mixture_sample(
     whole = F.lit(int(default_weight))
     frac_pct = F.lit(int(round((default_weight % 1) * 100)))
     for stratum, w in sorted(weights.items()):
-        assert w >= 0
+        if w < 0:
+            raise ValueError(f"weights[{stratum!r}]={w} must be >= 0")
         whole = F.when(
             F.col(strata_col) == stratum, F.lit(int(w))
         ).otherwise(whole)

@@ -1,16 +1,28 @@
 """Deduplication operators for training-data pipelines.
 
-All stages are pure DataFrame expressions (JVM-side, no Python UDFs):
-
 - :func:`exact_dedup_groups` / :func:`exact_dedup` — hash-groupBy exact dedup.
 - :func:`tokenize` — shared lowercase word tokenizer.
 - :func:`minhash_signatures` — k-permutation MinHash where each permutation
   is "lexicographic min of md5(i:word)"; a string-min is a valid uniform
   min-hash and is reproducible in any engine with md5.
-- :func:`lsh_bands` / :func:`lsh_candidate_pairs` — banding + skew-proof
-  blocked per-bucket pair generation.
+- :func:`lsh_bands` / :func:`lsh_candidate_pairs` /
+  :func:`banded_unique_pairs` — banding + skew-proof blocked per-bucket
+  pair generation.
 - :func:`jaccard_pairs` — exact word-set Jaccard for candidate verification.
-- :func:`simhash` — b-bit SimHash via md5-derived bit contributions.
+- :func:`near_dup_pairs` / :func:`incremental_near_dups` — the
+  MinHash→LSH→verify pipeline, batch and delta-vs-corpus.
+- :func:`ngram_jaccard_pairs` / :func:`ngram_containment_pairs` — n-gram
+  shingle near-dups via an inverted-index self-join.
+- :func:`simhash` / :func:`simhash_pairs` — b-bit SimHash via md5-derived
+  bit contributions, banded pigeonhole candidates.
+- :func:`blocked_edit_distance_pairs` — blocking + Levenshtein linkage.
+- :func:`duplicated_spans` — span-level exact-substring duplication.
+- :func:`connected_components` / :func:`dedup_keep_canonical` — cluster
+  closure over near-dup pairs (two-phase "filtering" union-find).
+
+Every stage is a JVM-side DataFrame expression except the cluster
+closure, whose union-find runs in one Arrow-batched ``mapInPandas`` pass
+(and on the driver once the graph is contracted small).
 
 Scale notes: the only shuffles are the per-doc groupBys (keyed by doc id)
 and the band-bucket self-join, whose fan-out is bounded by bucket size; at
@@ -19,6 +31,8 @@ pairs — cap B and spill the rest to a second LSH round with different seeds).
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 import pandas as pd
 
@@ -91,6 +105,34 @@ def minhash_signatures(
     return toks.groupBy(id_col).agg(*aggs)
 
 
+def _n_bands(num_perm: int, rows_per_band: int) -> int:
+    """Band count of a ``num_perm``-row signature. A remainder would
+    floor-divide away the trailing signature rows (quietly different
+    candidate recall), so it fails instead."""
+    if num_perm % rows_per_band != 0:
+        raise ValueError(
+            f"num_perm={num_perm} must be divisible by "
+            f"rows_per_band={rows_per_band}"
+        )
+    return num_perm // rows_per_band
+
+
+def _band_hashes(num_perm: int, rows_per_band: int) -> list[Column]:
+    """Per band, ``xxhash64`` of its ``|``-joined ``sig_*`` rows."""
+    return [
+        F.xxhash64(
+            F.concat_ws(
+                "|",
+                *[
+                    F.col(f"sig_{b * rows_per_band + r}")
+                    for r in range(rows_per_band)
+                ],
+            )
+        )
+        for b in range(_n_bands(num_perm, rows_per_band))
+    ]
+
+
 def lsh_bands(
     sig_df: DataFrame,
     id_col: str = "doc_id",
@@ -104,18 +146,10 @@ def lsh_bands(
     an 8-byte join key beats a hex digest — the band self-join and the
     candidate dedup shuffle dominate LSH cost on dup-heavy corpora.
     """
-    assert num_perm % rows_per_band == 0
-    bands = []
-    for b in range(num_perm // rows_per_band):
-        cols = [
-            F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)
-        ]
-        bands.append(
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.xxhash64(F.concat_ws("|", *cols)).alias("band_hash"),
-            )
-        )
+    bands = [
+        F.struct(F.lit(b).alias("band_idx"), h.alias("band_hash"))
+        for b, h in enumerate(_band_hashes(num_perm, rows_per_band))
+    ]
     return sig_df.select(
         F.col(id_col), F.explode(F.array(*bands)).alias("band")
     ).select(id_col, "band.band_idx", "band.band_hash")
@@ -195,49 +229,70 @@ def expand_sorted_array_pairs(
     one degenerate array cannot pin a core. Pairs across rows are NOT
     deduplicated here.
     """
+    small, big = _expand_sorted(
+        arrays_df, "__ids", block_size, "id_a", "id_b", lambda v: v
+    )
+    return small.unionByName(big)
+
+
+def _expand_sorted(
+    arrays: DataFrame,
+    arr: str,
+    block_size: int,
+    a: str,
+    b: str,
+    key: Callable[[Column], Column],
+    *keep: Column,
+) -> tuple[DataFrame, DataFrame]:
+    """(small, big) member-pair streams of each row's array column
+    ``arr``, sorted by ``key``: every (a, b) with key(a) < key(b), beside
+    the ``keep`` columns. Arrays of ≤ ``block_size`` members expand in
+    place (``small``); larger ones are cut into ``block_size`` slices
+    whose (i ≤ j) slice pairs are round-robin repartitioned before they
+    expand (``big``), so one degenerate array cannot pin a core. Slices
+    come from a sorted array, so only same-slice pairs need the key
+    comparison."""
     c = int(block_size)
 
-    small_pairs = (
-        arrays_df.filter(F.size("__ids") <= c)
-        .select(F.col("__ids").alias("bb"), F.explode("__ids").alias("id_a"))
-        .select(
-            "id_a",
-            F.explode(
-                F.filter(F.col("bb"), lambda y: y > F.col("id_a"))
-            ).alias("id_b"),
-        )
-    )
+    def later(y: Column) -> Column:
+        return key(y) > key(F.col(a))
 
-    big = arrays_df.filter(F.size("__ids") > c)
+    small = (
+        arrays.filter(F.size(arr) <= c)
+        .select(*keep, F.col(arr).alias("bb"), F.explode(arr).alias(a))
+        .select(*keep, a, F.explode(F.filter(F.col("bb"), later)).alias(b))
+    )
     blocks = F.expr(
-        f"transform(sequence(0, cast(ceil(size(__ids) / {c}.0) AS INT) - 1),"
-        f" k -> slice(__ids, k * {c} + 1, {c}))"
+        f"transform(sequence(0, cast(ceil(size({arr}) / {c}.0) AS INT) - 1),"
+        f" k -> slice({arr}, k * {c} + 1, {c}))"
     )
     block_pairs = F.expr(
         "flatten(transform(sequence(0, size(__blocks) - 1), i ->"
         " transform(sequence(i, size(__blocks) - 1), j ->"
         " struct(__blocks[i] AS ba, __blocks[j] AS bb, i = j AS same))))"
     )
-    big_pairs = (
-        big.select(blocks.alias("__blocks"))
-        .select(F.explode(block_pairs).alias("bp"))
-        .repartition(arrays_df.sparkSession.sparkContext.defaultParallelism)
+    big = (
+        arrays.filter(F.size(arr) > c)
+        .select(*keep, blocks.alias("__blocks"))
+        .select(*keep, F.explode(block_pairs).alias("bp"))
+        .repartition(arrays.sparkSession.sparkContext.defaultParallelism)
         .select(
+            *keep,
             F.col("bp.same").alias("same"),
             F.col("bp.bb").alias("bb"),
-            F.explode("bp.ba").alias("id_a"),
+            F.explode("bp.ba").alias(a),
         )
         .select(
-            "id_a",
+            *keep,
+            a,
             F.explode(
-                F.when(
-                    F.col("same"),
-                    F.filter(F.col("bb"), lambda y: y > F.col("id_a")),
-                ).otherwise(F.col("bb"))
-            ).alias("id_b"),
+                F.when(F.col("same"), F.filter(F.col("bb"), later)).otherwise(
+                    F.col("bb")
+                )
+            ).alias(b),
         )
     )
-    return small_pairs.unionByName(big_pairs)
+    return small, big
 
 
 def banded_unique_pairs(
@@ -284,7 +339,6 @@ def banded_unique_pairs(
     """
     if n_bands is None:
         raise ValueError("pass n_bands (static band count)")
-    c = int(block_size)
     # Member struct: id plus the doc's band hashes for every band that
     # can ever be a PRIOR band (0..n_bands-2). sort_array orders by the
     # leading field, so member arrays are id-sorted like the classic
@@ -322,61 +376,20 @@ def banded_unique_pairs(
             out = out | ((k > F.lit(j)) & a[f"h{j}"].eqNullSafe(b[f"h{j}"]))
         return out
 
-    small_pairs = (
-        buckets.filter(F.size("__mem") <= c)
-        .select(k, F.col("__mem").alias("bb"), F.explode("__mem").alias("a"))
-        .select(
-            k,
-            "a",
-            F.explode(
-                F.filter(F.col("bb"), lambda y: y["id"] > F.col("a")["id"])
-            ).alias("b"),
-        )
+    def fresh(pairs: DataFrame) -> DataFrame:
         # Staleness runs as a TOP-LEVEL filter, not inside the array
         # lambda: higher-order lambdas are interpreted (no codegen), so
         # per-candidate struct work there measured 5-9× slower than the
         # classic distinct() it replaces; as a codegen Filter over plain
         # struct-field reads it is a few compiled comparisons per row.
-        .where(~_stale(F.col("a"), F.col("b")))
-        .select(F.col("a")["id"].alias("id_a"), F.col("b")["id"].alias("id_b"))
-    )
+        return pairs.where(~_stale(F.col("a"), F.col("b"))).select(
+            F.col("a")["id"].alias("id_a"), F.col("b")["id"].alias("id_b")
+        )
 
-    big = buckets.filter(F.size("__mem") > c)
-    blocks = F.expr(
-        f"transform(sequence(0, cast(ceil(size(__mem) / {c}.0) AS INT) - 1),"
-        f" k -> slice(__mem, k * {c} + 1, {c}))"
+    small, big = _expand_sorted(
+        buckets, "__mem", block_size, "a", "b", lambda m: m["id"], k
     )
-    block_pairs = F.expr(
-        "flatten(transform(sequence(0, size(__blocks) - 1), i ->"
-        " transform(sequence(i, size(__blocks) - 1), j ->"
-        " struct(__blocks[i] AS ba, __blocks[j] AS bb, i = j AS same))))"
-    )
-    big_pairs = (
-        big.select(k, blocks.alias("__blocks"))
-        .select(k, F.explode(block_pairs).alias("bp"))
-        .repartition(bands_all.sparkSession.sparkContext.defaultParallelism)
-        .select(
-            k,
-            F.col("bp.same").alias("same"),
-            F.col("bp.bb").alias("bb"),
-            F.explode("bp.ba").alias("a"),
-        )
-        .select(
-            k,
-            "a",
-            F.explode(
-                F.when(
-                    F.col("same"),
-                    F.filter(
-                        F.col("bb"), lambda y: y["id"] > F.col("a")["id"]
-                    ),
-                ).otherwise(F.col("bb"))
-            ).alias("b"),
-        )
-        .where(~_stale(F.col("a"), F.col("b")))
-        .select(F.col("a")["id"].alias("id_a"), F.col("b")["id"].alias("id_b"))
-    )
-    return small_pairs.unionByName(big_pairs)
+    return fresh(small).unionByName(fresh(big))
 
 
 def jaccard_pairs(
@@ -483,22 +496,8 @@ def near_dup_pairs(
     (:func:`expand_sorted_array_pairs`); cross-clique products explode one
     side before the other so AQE can rebalance between the two explodes.
     """
-    if num_perm % rows_per_band != 0:
-        # Match lsh_bands' contract up front (round-12 ADVICE): the banded
-        # paths floor-divide num_perm // rows_per_band, which would
-        # silently drop the trailing signature rows (quietly different
-        # candidate recall) instead of failing.
-        raise ValueError(
-            f"num_perm={num_perm} must be divisible by "
-            f"rows_per_band={rows_per_band}"
-        )
-    groups = df.groupBy(F.md5(F.col(text_col)).alias("__th")).agg(
-        F.min(id_col).alias("__rep"),
-        F.sort_array(F.collect_set(F.col(id_col))).alias("__ids"),
-    )
-    reps = df.join(
-        groups.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
-    )
+    n_bands = _n_bands(num_perm, rows_per_band)
+    groups, reps = _text_reps(df, text_col, id_col)
 
     sigs = minhash_signatures(reps, text_col, id_col, num_perm)
     if max_bucket_size is None:
@@ -509,24 +508,9 @@ def near_dup_pairs(
         # pair-level distinct) vanishes; see banded_unique_pairs.
         bands_all = sigs.select(
             F.col(id_col),
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.col(f"sig_{b * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    )
-                    for b in range(num_perm // rows_per_band)
-                ]
-            ).alias("__bhs"),
+            F.array(*_band_hashes(num_perm, rows_per_band)).alias("__bhs"),
         )
-        cands = banded_unique_pairs(
-            bands_all, id_col, n_bands=num_perm // rows_per_band
-        )
+        cands = banded_unique_pairs(bands_all, id_col, n_bands=n_bands)
     else:
         # The bucket-size cap's documented semantics ("drop the bucket,
         # pairs may re-surface through other bands") need the classic
@@ -539,42 +523,32 @@ def near_dup_pairs(
     rep_jac = jaccard_pairs(reps, cands, text_col, id_col).filter(
         F.col("jaccard") >= threshold
     )
-
-    # Intra-clique pairs: identical texts, Jaccard is exactly 1.0 (the
-    # verify formula on equal token sets), included whenever t ≤ 1 — but
-    # only for texts that HAVE a signature: a zero-token text generates no
-    # bands, so even exact copies of it are never candidates in the
-    # uncollapsed pipeline (and the oracle), and must not pair up here.
+    # A zero-token text generates no bands, so even exact copies of it
+    # are never candidates in the uncollapsed pipeline (and the oracle):
+    # only texts that HAVE a signature pair up among their copies.
     with_sig = groups.join(
         sigs.select(F.col(id_col).alias("__rep")), "__rep", "left_semi"
     )
-    same_pairs = expand_sorted_array_pairs(
-        with_sig.filter(F.size("__ids") >= 2).select("__ids")
-    ).select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
+    return _expand_rep_pairs_to_docs(groups, rep_jac, with_sig, threshold)
 
-    # Cross-text pairs: every doc of text A × every doc of text B carries
-    # the rep pair's verified Jaccard. Two-step explode keeps the row
-    # width bounded (first explode frees the A array before B fans out).
-    ga = groups.select(
-        F.col("__rep").alias("id_a"), F.col("__ids").alias("__ia")
+
+def _text_reps(
+    df: DataFrame, text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """Collapse exact copies before a per-text quadratic stage.
+
+    Returns ``(groups, reps)``: ``groups`` holds one row per distinct
+    text (``__rep`` = its min id, ``__ids`` = its sorted member ids) and
+    ``reps`` the input rows of every ``__rep``.
+    """
+    groups = df.groupBy(F.md5(F.col(text_col)).alias("__th")).agg(
+        F.min(id_col).alias("__rep"),
+        F.sort_array(F.collect_set(F.col(id_col))).alias("__ids"),
     )
-    gb = groups.select(
-        F.col("__rep").alias("id_b"), F.col("__ids").alias("__ib")
+    reps = df.join(
+        groups.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
     )
-    cross_pairs = (
-        rep_jac.join(ga, "id_a")
-        .join(gb, "id_b")
-        .select("jaccard", "__ib", F.explode("__ia").alias("x"))
-        .select("jaccard", "x", F.explode("__ib").alias("y"))
-        .select(
-            F.least("x", "y").alias("id_a"),
-            F.greatest("x", "y").alias("id_b"),
-            "jaccard",
-        )
-    )
-    if threshold > 1.0:  # degenerate: nothing can reach it, 1.0 included
-        same_pairs = same_pairs.filter(F.lit(False))
-    return same_pairs.unionByName(cross_pairs)
+    return groups, reps
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
@@ -725,13 +699,7 @@ def ngram_jaccard_pairs(
         # At t = 0 the strategies genuinely differ (the index emits only
         # shingle-sharing pairs; all-pairs would emit J=0 pairs too).
         raise ValueError("strategy='allpairs' requires threshold > 0")
-    groups = df.groupBy(F.md5(F.col(text_col)).alias("__th")).agg(
-        F.min(id_col).alias("__rep"),
-        F.sort_array(F.collect_set(F.col(id_col))).alias("__ids"),
-    )
-    reps = df.join(
-        groups.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
-    )
+    groups, reps = _text_reps(df, text_col, id_col)
     # Materialize the token array in its own projection so the regex split
     # runs once per row (the shingle expression references it 2+3n times,
     # and CSE does not reach into lambda bodies).
@@ -782,19 +750,7 @@ def ngram_jaccard_pairs(
             sh_arr.select(F.col(id_col).alias("__rep")), "__rep", "left_semi"
         )
         return _expand_rep_pairs_to_docs(groups, rep_jac, shingled, threshold)
-    sh = toks.select(
-        F.col(id_col),
-        # 64-bit-hash the shingle before the self-join: the join stream is
-        # Σ posting-list² rows, and an 8-byte key shuffles/compares an
-        # order of magnitude cheaper than a multi-word string key
-        # (collisions ~2⁻⁶⁴ — immaterial).
-        F.explode(
-            F.transform(
-                word_shingles_from_tokens(F.col("__toks"), n),
-                lambda s: F.xxhash64(s),
-            )
-        ).alias("s"),
-    )
+    sh = _hashed_shingles(toks, id_col, n)
     if reuse_shingles:
         # The shingle frame feeds three consumers (both self-join sides
         # and the per-doc sizes); Spark's ReuseExchange covers the join
@@ -824,19 +780,8 @@ def ngram_jaccard_pairs(
             .select("s")
         )
         sh_joinable = sh.join(hot, "s", "left_anti")
-    a = sh_joinable.select(F.col(id_col).alias("id_a"), "s")
-    b = sh_joinable.select(F.col(id_col).alias("id_b"), "s")
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
     rep_jac = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlaps(sh_joinable, sizes, id_col)
         .select(
             "id_a",
             "id_b",
@@ -856,6 +801,45 @@ def ngram_jaccard_pairs(
     return _expand_rep_pairs_to_docs(groups, rep_jac, shingled, threshold)
 
 
+def _hashed_shingles(toks: DataFrame, id_col: str, n: int) -> DataFrame:
+    """(id, s): one row per n-gram shingle of the ``__toks`` token array.
+
+    Shingles are 64-bit-hashed before the self-join: the join stream is
+    Σ posting-list² rows, and an 8-byte key shuffles/compares an order of
+    magnitude cheaper than a multi-word string key (collisions ~2⁻⁶⁴ —
+    immaterial).
+    """
+    return toks.select(
+        F.col(id_col),
+        F.explode(
+            F.transform(
+                word_shingles_from_tokens(F.col("__toks"), n),
+                lambda s: F.xxhash64(s),
+            )
+        ).alias("s"),
+    )
+
+
+def _shingle_overlaps(
+    sh: DataFrame, sizes: DataFrame, id_col: str
+) -> DataFrame:
+    """(id_a < id_b, n_inter, n_a, n_b) for every pair sharing ≥1 shingle
+    of ``sh`` — the inverted-index self-join IS the candidate generation,
+    so all-pairs never materializes. ``sizes`` is (id, n_sh), each id's
+    shingle count."""
+    a = sh.select(F.col(id_col).alias("id_a"), "s")
+    b = sh.select(F.col(id_col).alias("id_b"), "s")
+    inter = (
+        a.join(b, "s")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
 def _expand_rep_pairs_to_docs(
     groups: DataFrame,
     rep_jac: DataFrame,
@@ -863,9 +847,12 @@ def _expand_rep_pairs_to_docs(
     threshold: float,
 ) -> DataFrame:
     """Expand verified rep-level pairs back to doc-level pairs (shared by
-    both :func:`ngram_jaccard_pairs` strategies): intra-clique pairs of
-    exact copies carry Jaccard 1.0 (only for texts that have shingles —
-    ``shingled``), cross-text pairs carry the rep pair's value."""
+    :func:`near_dup_pairs` and both :func:`ngram_jaccard_pairs`
+    strategies): intra-clique pairs of exact copies carry Jaccard 1.0 —
+    only for texts in ``shingled``, the ones the pair stage can see at
+    all — and cross-text pairs carry the rep pair's value. Cross-clique
+    products explode one side before the other, so the first explode
+    frees the A array before B fans out."""
     same_pairs = expand_sorted_array_pairs(
         shingled.filter(F.size("__ids") >= 2).select("__ids")
     ).select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
@@ -898,9 +885,9 @@ def _cc_union_find_local(edges: DataFrame) -> DataFrame:
     Union-find is direction-agnostic and self-loop/duplicate-tolerant, so
     any edge view that mentions every node works.
 
-    Reached on explicit ``algorithm="local"`` or as two-phase's closure
-    over the contracted forest when that forest is under the adaptive
-    threshold (see connected_components) — the same runtime-adaptivity
+    Two-phase's closure over the contracted forest when that forest is
+    under the ``small_graph_edges`` gate (see connected_components) — the
+    same runtime-adaptivity
     philosophy as AQE's sort-merge→broadcast conversion: pay a distributed
     loop only when the data demands it. A bounded driver collect of a few
     million longs replaces 2–4 shuffle rounds each costing several
@@ -980,10 +967,10 @@ def _cc_two_phase(
     canonical src≥dst form (roots are per-partition minima), which is
     exactly what both closures expect.
 
-    Fixed point (node → min reachable id) is identical to label/star/
-    local by construction. At 100 TB this replaces O(diameter) or
-    O(log n) full-|E| shuffle rounds with ONE linear Arrow-batched pass
-    over |E| plus a closure over the P·|V|-bounded forest.
+    Fixed point (node → min reachable id) is identical under both
+    closures by construction. At 100 TB this replaces O(log n) full-|E|
+    shuffle rounds with ONE linear Arrow-batched pass over |E| plus a
+    closure over the P·|V|-bounded forest.
 
     ``und`` must be the canonical view (src = greater id, dst = smaller
     id; duplicates and self-loops allowed — self-loops register the
@@ -1016,8 +1003,8 @@ def _cc_two_phase(
             return
         nodes = list(parent)
         # Roots ride along as (r, r) self-rows so phase 2 sees every
-        # node (matches the local/label treatment of self-loop-only
-        # nodes); they are a per-component handful of extra rows. The
+        # node (a self-loop-only node is its own component); they are a
+        # per-component handful of extra rows. The
         # forest is yielded in bounded chunks, not one frame: a single
         # pandas batch holding a skewed partition's whole node set
         # would be serialized as one Arrow batch (2 GB record-batch
@@ -1034,23 +1021,15 @@ def _cc_two_phase(
         eager=True
     )
     cnt = forest.count()
-    # Iterated filtering (round-11): the first forest is bounded by
-    # P·|V|, and a dense graph HITS that bound — every partition sees
-    # most nodes, so at 32·k input partitions the forest grows ~k²
-    # (measured: 259M salted-clique pairs → ~10⁸-row forest). Rather
-    # than handing a forest that large to O(log n)·3-shuffle star
-    # contraction, re-run the SAME partition-local contraction over
-    # the forest with a shrunken partition count (each pass: one
-    # repartition exchange + one linear Arrow sweep; correctness is
-    # the pass-1 argument verbatim — a union of per-partition spanning
-    # forests of a forest preserves exactly the original components,
-    # and union-by-min keeps labels on the min-id grid). Partition
-    # count is chosen so per-partition union-find state stays ~3M
-    # entries; each pass shrinks the frame toward P'·|V|, normally
-    # reaching the driver gate in 1-2 passes. Star contraction remains
-    # the fallback if shrinkage stalls (possible only when |V| alone
-    # exceeds the gate — then O(log n) rounds genuinely are the
-    # memory-safe answer).
+    # Iterated filtering (round-11; phase 2 in the docstring): at 32·k
+    # input partitions a dense graph's forest grows ~k² (measured: 259M
+    # salted-clique pairs → ~10⁸-row forest). Each pass is correct by the
+    # pass-1 argument verbatim — a union of per-partition spanning
+    # forests of a forest preserves exactly the original components, and
+    # union-by-min keeps labels on the min-id grid. The partition count
+    # keeps per-partition union-find state ~3M entries; each pass shrinks
+    # the frame toward P'·|V|, normally reaching the driver gate in 1-2
+    # passes.
     passes = 0
     while 2 * cnt > small_graph_edges and passes < 4:
         nparts = max(1, -(-cnt // _CONTRACT_ROWS_PER_PART))
@@ -1089,19 +1068,15 @@ def _cc_star_contraction(edges: DataFrame, max_iter: int) -> DataFrame:
     at each component's minimum id. Convergence is detected by an
     (edge-count, order-insensitive checksum) pair riding the same action
     that materializes the round's checkpoint — one job per round. Per
-    round the cost is two groupBys + one dedup over |E| — ~3 shuffles vs
-    label-prop's 1, which is why this is the HIGH-DIAMETER strategy, not
-    the default: near-dup graphs are clique-heavy (diameter 2–3) and
-    cheaper under label-prop.
+    round the cost is two groupBys + one dedup over |E| (~3 shuffles),
+    which is why :func:`_cc_two_phase` runs it only over a contracted
+    forest too big for the driver.
 
-    ``edges`` may arrive canonical (src ≥ dst) or mixed-direction, with
-    duplicates and self-loops tolerated: the first filter below takes
-    the src > dst view (dropping duplicates is handled by the per-round
-    ``distinct``), and self-loop-only nodes are restored by the lonely
-    anti-join at the end — this is the contract both callers actually
-    use (``connected_components`` passes the canonical ``und`` view,
-    ``_cc_two_phase`` the non-deduped forest). Output: (node,
-    component).
+    ``edges`` is the canonical (src ≥ dst) forest, duplicates and
+    self-rows tolerated: the first filter below takes the src > dst view
+    (duplicates are dropped by the per-round ``distinct``), and nodes
+    seen only in self-rows are restored by the lonely anti-join at the
+    end. Output: (node, component).
     """
     # Canonical undirected form: src > dst (every edge once, larger first).
     cur = edges.filter(F.col("src") > F.col("dst")).localCheckpoint(
@@ -1167,12 +1142,11 @@ def _cc_star_contraction(edges: DataFrame, max_iter: int) -> DataFrame:
     ).unionByName(
         roots.select("node", F.col("node").alias("component"))
     )
-    # Nodes appearing ONLY in self-loops are dropped by the src>dst
-    # canonicalization above but are their own components under the
-    # local/label/two-phase strategies — restore them so every strategy
-    # produces the same labeling on the same input. The self-loop set
-    # is empty on near-dup pair streams, so this branch costs one
-    # narrow filter + a near-empty anti-join.
+    # Nodes appearing ONLY in self-rows are dropped by the src>dst
+    # canonicalization above but are their own components under driver
+    # union-find — restore them so both closures label the same input
+    # the same way. This costs one narrow filter + one anti-join over
+    # the forest's root rows.
     lonely = (
         edges.filter(F.col("src") == F.col("dst"))
         .select(F.col("src").alias("node"))
@@ -1190,8 +1164,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 25,
     small_graph_edges: int = 4_000_000,
-    algorithm: str = "auto",
-    broadcast_nodes: int = 2_000_000,
 ) -> DataFrame:
     """Cluster near-dup pairs into components: (node, component) where
     component = the minimum node id reachable through the pair graph.
@@ -1201,134 +1173,27 @@ def connected_components(
     (A~B, B~C must collapse to one keeper even if A~C was never a
     candidate).
 
-    ``algorithm`` picks the strategy:
-
-    - ``"auto"`` (default) = ``"two_phase"``: partition-local union-find
-      (one Arrow-batched ``mapInPandas`` pass over the canonical pair
-      stream — no dedup shuffle, no checkpoint, no sizing count; the
-      pass is the pair pipeline's only consumer, so it is evaluated
-      exactly once) contracts |E| to a union of spanning forests
-      ≤ P·|V| rows; the closure then runs over the forest — driver
-      union-find when 2·|forest| ≤ ``small_graph_edges`` (≤ ~64 MB of
-      longs at the default, the same runtime adaptivity AQE applies to
-      small join sides, measured on the CONTRACTED set where counting
-      is cheap), star contraction otherwise. Set
-      ``small_graph_edges=0`` to force a fully distributed closure.
-      See :func:`_cc_two_phase`.
-    - ``"label"``: iterative min-label propagation — each round every
-      node takes the min of its own and its neighbors' labels, one
-      join+groupBy per round, converging in O(component DIAMETER) rounds
-      — cheap on clique-heavy near-dup graphs (diameter 2–3), but every
-      round still reshuffles the full edge set, which is why two_phase
-      displaced it as auto's big-graph default in round 10. Round 1 is
-      join-free (``min(node, min(neighbors))``
-      — one groupBy over the edge list); rounds are localCheckpoint()ed
-      so lineage stays flat, and the convergence check rides the SAME
-      action that materializes the checkpoint (one job per round). When
-      the label table is small (≤ ``broadcast_nodes``) each round
-      broadcast-joins it against the checkpointed edges instead of
-      paying a 2×|E| sort-merge exchange — the clique-heavy near-dup
-      case where |E| ≫ |V|.
-    - ``"star"``: alternating large-star/small-star contraction
-      (:func:`_cc_star_contraction`) — O(log n) rounds independent of
-      diameter, ~3 shuffles per round. Choose it for chain/mesh-shaped
-      graphs (similarity time-series, citation paths) where diameter ≫
-      log n; the unit tests pin a 400-node path graph that label-prop
-      cannot finish in 25 rounds and star finishes in ~5.
-    - ``"local"``: force the driver union-find (caller asserts the graph
-      is small).
-
-    At 100 TB each label round is one shuffle of |E| + |V|, each star
-    round ~3·|E|, while two_phase touches |E| exactly once (one Arrow
-    pass, per-partition state bounded by the partition's node count) and
-    closes over a P·|V|-bounded forest; ``small_graph_edges`` keeps the
-    driver-collect fallback in charge only when the CONTRACTED forest is
-    provably tiny.
+    One path for every graph shape, :func:`_cc_two_phase`: one
+    partition-local union-find pass contracts the pairs to a
+    P·|V|-bounded spanning forest, which then closes by driver union-find
+    when 2·|forest| ≤ ``small_graph_edges`` (≤ ~64 MB of longs at the
+    default — runtime adaptivity measured on the CONTRACTED set, where
+    counting is cheap) and by star contraction
+    (:func:`_cc_star_contraction`, at most ``max_iter`` rounds)
+    otherwise; ``small_graph_edges=0`` forces the distributed closure.
+    Union-find does not depend on component diameter, so a chain-shaped
+    graph takes the same path as a clique-shaped one.
     """
-    if algorithm not in ("auto", "label", "star", "local", "two_phase"):
-        raise ValueError(
-            f"unknown algorithm {algorithm!r}; "
-            "expected auto | label | star | local | two_phase"
-        )
     # Canonical undirected view: one row per pair, larger id first — a
     # NARROW projection, deliberately not deduped or materialized.
-    # Union-find (local and two-phase) is duplicate- and direction-
-    # tolerant, so auto never pays a distinct shuffle, a checkpoint
-    # write, or a sizing count() over the full pair stream: the two-
-    # phase pass below is the only consumer and evaluates the pair
-    # pipeline exactly once. Only the explicitly-requested label/star
-    # strategies (which DO reshuffle edges every round) dedup+checkpoint
-    # first.
+    # Union-find is duplicate- and direction-tolerant, so the two-phase
+    # pass below is the only consumer and evaluates the pair pipeline
+    # exactly once.
     cand = pairs.select(
         F.greatest(F.col(id_a), F.col(id_b)).alias("src"),
         F.least(F.col(id_a), F.col(id_b)).alias("dst"),
     )
-    if algorithm == "local":
-        return _cc_union_find_local(cand)
-    if algorithm in ("two_phase", "auto"):
-        # Auto always contracts first: one linear pass shrinks |E| to a
-        # P·|V|-bounded forest, and the forest's own size (not a count
-        # of the raw pair stream) picks driver union-find vs star —
-        # runtime adaptivity measured where it's cheap.
-        return _cc_two_phase(cand, max_iter, small_graph_edges)
-    und = cand.distinct().localCheckpoint(eager=True)
-    if algorithm == "star":
-        return _cc_star_contraction(und, max_iter)
-    edges = und.unionByName(
-        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-
-    # Round 1, join-free: label(node) = min(node, min over neighbors).
-    labels = (
-        edges.groupBy(F.col("dst").alias("node"))
-        .agg(F.least(F.col("node"), F.min("src")).alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    # Near-dup graphs are clique-heavy: |E| can be huge while |V| stays
-    # small (every doc in a dup clique contributes O(clique) edges). When
-    # the label table fits a broadcast (≤ broadcast_nodes rows — it is
-    # already materialized, so the count is a cheap local job), each
-    # propagation round becomes a broadcast-hash join over the
-    # checkpointed edges plus a |V|-bounded map-side-combined groupBy —
-    # no 2×|E| sort-merge exchange per round. localCheckpoint hides row
-    # stats from AQE, so without the explicit hint Spark must assume the
-    # label side is large; this is the same runtime adaptivity AQE would
-    # apply if it could see the stats. Graphs with |V| above the
-    # threshold keep the shuffle join — broadcasting a corpus-scale
-    # label table would OOM every executor.
-    bcast = labels.count() <= broadcast_nodes
-    n_changed = -1
-    for _ in range(max_iter - 1):
-        lab_src = labels.withColumnRenamed("node", "src")
-        neighbor_min = (
-            edges.join(F.broadcast(lab_src) if bcast else lab_src, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("component").alias("__nbr_min"))
-        )
-        if bcast:
-            neighbor_min = F.broadcast(neighbor_min)
-        updated = labels.join(neighbor_min, "node", "left").select(
-            "node",
-            F.least(
-                F.col("component"), F.coalesce("__nbr_min", "component")
-            ).alias("component"),
-            (F.coalesce("__nbr_min", "component") < F.col("component")).alias(
-                "__chg"
-            ),
-        ).localCheckpoint(eager=False)
-        # One action: materializes the checkpoint AND tests convergence.
-        n_changed = updated.filter(F.col("__chg")).count()
-        labels = updated.drop("__chg")
-        if n_changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({n_changed} labels still changing) — the pair graph has a "
-            "component with diameter above max_iter; raise max_iter "
-            "(cost is one join+groupBy round each)"
-        )
-    return labels
+    return _cc_two_phase(cand, max_iter, small_graph_edges)
 
 
 def dedup_keep_canonical(
@@ -1373,7 +1238,8 @@ def simhash(
     Docs with zero tokens produce no row, exactly as in the uncollapsed
     form.
     """
-    assert bits <= 32
+    if bits > 32:
+        raise ValueError(f"bits={bits} must be <= 32 (md5-prefix hash)")
     nibbles = (bits + 3) // 4
     groups = df.groupBy(F.md5(F.col(text_col)).alias("__th")).agg(
         F.min(id_col).alias("__rep"),
@@ -1457,8 +1323,12 @@ def simhash_pairs(
     at 100 TB raise ``bits`` (wider fingerprints = fewer spurious band
     collisions) rather than lowering bands.
     """
-    assert max_hamming < n_bands, "pigeonhole guarantee needs d < n_bands"
-    assert bits % n_bands == 0
+    if max_hamming >= n_bands:
+        raise ValueError("pigeonhole guarantee needs d < n_bands")
+    if bits % n_bands:
+        raise ValueError(
+            f"bits={bits} must be divisible by n_bands={n_bands}"
+        )
     band_bits = bits // n_bands
     fp = simhash(df, text_col, id_col, bits)
     band_exprs = [
@@ -1541,27 +1411,11 @@ def incremental_near_dups(
     # the classic form disappears (the banded_unique_pairs argument,
     # bipartite case: for any (delta, corpus) pair the shared-band set
     # is fixed; exactly its minimum emits).
-    if num_perm % rows_per_band != 0:
-        raise ValueError(  # see near_dup_pairs: floor-division would
-            f"num_perm={num_perm} must be divisible by "  # drop bands
-            f"rows_per_band={rows_per_band}"
-        )
-    n_bands = num_perm // rows_per_band
+    n_bands = _n_bands(num_perm, rows_per_band)
 
     def _band_vec(src: DataFrame, out_id: str) -> DataFrame:
         sigs = minhash_signatures(src, text_col, id_col, num_perm)
-        bhs = [
-            F.xxhash64(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"sig_{b * rows_per_band + r}")
-                        for r in range(rows_per_band)
-                    ],
-                )
-            )
-            for b in range(n_bands)
-        ]
+        bhs = _band_hashes(num_perm, rows_per_band)
         return sigs.select(
             F.col(id_col).alias(out_id),
             *[bhs[j].alias(f"__{out_id}_h{j}") for j in range(n_bands - 1)],
@@ -1763,41 +1617,16 @@ def ngram_containment_pairs(
 
     Output: (id_a < id_b, containment_a = |A∩B|/|A|, containment_b).
     """
-    groups = df.groupBy(F.md5(F.col(text_col)).alias("__th")).agg(
-        F.min(id_col).alias("__rep"),
-        F.sort_array(F.collect_set(F.col(id_col))).alias("__ids"),
-    )
-    reps = df.join(
-        groups.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
-    )
+    groups, reps = _text_reps(df, text_col, id_col)
     toks = _fan_out(
         reps.select(
             F.col(id_col), tokenize(F.col(text_col)).alias("__toks")
         )
     )
-    sh = toks.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                word_shingles_from_tokens(F.col("__toks"), n),
-                lambda s: F.xxhash64(s),
-            )
-        ).alias("s"),
-    )
+    sh = _hashed_shingles(toks, id_col, n)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "s")
-    b = sh.select(F.col(id_col).alias("id_b"), "s")
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
     rep_pairs = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlaps(sh, sizes, id_col)
         .select(
             "id_a",
             "id_b",

@@ -39,7 +39,8 @@ def z_value(bucket_cols: list[Column], bits: int) -> Column:
     be in [0, 2^bits); total bits must fit a long.
     """
     n = len(bucket_cols)
-    assert n * bits <= 63, "interleaved width must fit a signed long"
+    if n * bits > 63:
+        raise ValueError("interleaved width must fit a signed long")
     terms = []
     for i, c in enumerate(bucket_cols):
         for j in range(bits):

@@ -97,6 +97,32 @@ def _corpus_quantized(
     )
 
 
+def _neighbor_cosines(joined: DataFrame, id_col: str) -> DataFrame:
+    """(query_id, neighbor_id, cosine) of rows that pair a query's
+    ``q_qv``/``q_nsq`` with a corpus vector's ``qv``/``nsq``."""
+    return joined.select(
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        cosine(
+            dot_long(F.col("q_qv"), F.col("qv")), F.col("q_nsq"), F.col("nsq")
+        ).alias("cosine"),
+    )
+
+
+def _top_k(scored: DataFrame, k: int, score: str) -> DataFrame:
+    """(query_id, neighbor_id, rnk, score): each query's ``k`` best
+    neighbors of ``scored``, ties broken on neighbor id so results are
+    total-ordered."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", "rnk", score)
+    )
+
+
 def cosine_topk_bruteforce(
     df: DataFrame,
     queries: DataFrame,
@@ -117,26 +143,11 @@ def cosine_topk_bruteforce(
         F.col("qv").alias("q_qv"),
         F.col("nsq").alias("q_nsq"),
     )
-    scored = (
-        corpus.join(F.broadcast(qs), F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            cosine(
-                dot_long(F.col("q_qv"), F.col("qv")),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
-        )
+    scored = _neighbor_cosines(
+        corpus.join(F.broadcast(qs), F.col("query_id") != F.col(id_col)),
+        id_col,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "cosine")
-    )
+    return _top_k(scored, k, "cosine")
 
 
 def hyperplane_sign(plane: Column, dim: Column) -> Column:
@@ -229,27 +240,13 @@ def signlsh_topk(
         F.col("nsq").alias("q_nsq"),
         F.col("bucket"),
     )
-    scored = (
-        corpus.join(F.broadcast(qs), "bucket")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            cosine(
-                dot_long(F.col("q_qv"), F.col("qv")),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
-        )
+    scored = _neighbor_cosines(
+        corpus.join(F.broadcast(qs), "bucket").filter(
+            F.col("query_id") != F.col(id_col)
+        ),
+        id_col,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "cosine")
-    )
+    return _top_k(scored, k, "cosine")
 
 
 def ivf_assign(
@@ -350,27 +347,13 @@ def ivf_topk(
         .select("query_id", "q_qv", "q_nsq", "cell")
     )
 
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            cosine(
-                dot_long(F.col("q_qv"), F.col("qv")),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
-        )
+    scored = _neighbor_cosines(
+        assigned.join(F.broadcast(probes), "cell").filter(
+            F.col("query_id") != F.col(id_col)
+        ),
+        id_col,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "cosine")
-    )
+    return _top_k(scored, k, "cosine")
 
 
 def _subspace_explode(
@@ -386,6 +369,40 @@ def _subspace_explode(
     return frame.select(
         F.col(id_col), F.posexplode(subs).alias("s", "sub")
     ).withColumn("sub_nsq", norm_sq(F.col("sub")))
+
+
+def _pq_codewords(
+    df: DataFrame,
+    corpus: DataFrame,
+    m: int,
+    n_codewords: int,
+    vec_col: str,
+    id_col: str,
+    codebook: DataFrame | None,
+) -> tuple[int, DataFrame]:
+    """(sub_dim, codewords): the PQ codebook as (cid, s, cw, cw_nsq) rows,
+    one per codeword per subspace. ``codebook`` (same schema as ``df``)
+    supplies the codewords; when omitted the first ``n_codewords`` rows of
+    the quantized ``corpus`` stand in."""
+    # Slices past the end would silently shorten subvectors, so the
+    # dimension must divide evenly into m subspaces.
+    first_dim = df.select(F.size(F.col(vec_col)).alias("d")).limit(1)
+    dim = first_dim.collect()[0]["d"]  # 1-row scalar fetch, driver-safe
+    if dim % m:
+        raise ValueError(f"embedding dim {dim} not divisible by m={m}")
+    sub_dim = dim // m
+    cb_src = (
+        _corpus_quantized(codebook, vec_col, id_col)
+        if codebook is not None
+        else corpus.filter(F.col(id_col) < n_codewords)
+    )
+    codewords = _subspace_explode(cb_src, m, sub_dim, id_col).select(
+        F.col(id_col).alias("cid"),
+        "s",
+        F.col("sub").alias("cw"),
+        F.col("sub_nsq").alias("cw_nsq"),
+    )
+    return sub_dim, codewords
 
 
 def pq_topk(
@@ -428,24 +445,8 @@ def pq_topk(
     billion-vector search fit a cluster's memory.
     """
     corpus = _corpus_quantized(df, vec_col, id_col)
-    # Slices past the end would silently shorten subvectors, so the
-    # dimension must divide evenly into m subspaces.
-    first_dim = df.select(F.size(F.col(vec_col)).alias("d")).limit(1)
-    dim = first_dim.collect()[0]["d"]  # 1-row scalar fetch, driver-safe
-    if dim % m:
-        raise ValueError(f"embedding dim {dim} not divisible by m={m}")
-    sub_dim = dim // m
-
-    cb_src = (
-        _corpus_quantized(codebook, vec_col, id_col)
-        if codebook is not None
-        else corpus.filter(F.col(id_col) < n_codewords)
-    )
-    codewords = _subspace_explode(cb_src, m, sub_dim, id_col).select(
-        F.col(id_col).alias("cid"),
-        "s",
-        F.col("sub").alias("cw"),
-        F.col("sub_nsq").alias("cw_nsq"),
+    sub_dim, codewords = _pq_codewords(
+        df, corpus, m, n_codewords, vec_col, id_col, codebook
     )
 
     # Encode: nearest codeword per (vector, subspace) by exact-int L2 —
@@ -509,14 +510,7 @@ def pq_topk(
             ).alias("cosine_pq"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_pq").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "cosine_pq")
-    )
+    return _top_k(scored, k, "cosine_pq")
 
 
 def embedding_near_dup_pairs(
@@ -671,14 +665,7 @@ def cosine_topk_matmul(
     scored = df.select(id_col, vec_col).mapInPandas(
         fn, "query_id long, neighbor_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", "cosine")
-    )
+    return _top_k(scored, k, "cosine")
 
 
 def pq_reconstruction_errors(
@@ -704,21 +691,8 @@ def pq_reconstruction_errors(
     int64; the single division per subspace is correctly-rounded IEEE.
     """
     corpus = _corpus_quantized(df, vec_col, id_col)
-    first_dim = df.select(F.size(F.col(vec_col)).alias("d")).limit(1)
-    dim = first_dim.collect()[0]["d"]  # 1-row scalar fetch, driver-safe
-    if dim % m:
-        raise ValueError(f"embedding dim {dim} not divisible by m={m}")
-    sub_dim = dim // m
-    cb_src = (
-        _corpus_quantized(codebook, vec_col, id_col)
-        if codebook is not None
-        else corpus.filter(F.col(id_col) < n_codewords)
-    )
-    codewords = _subspace_explode(cb_src, m, sub_dim, id_col).select(
-        F.col(id_col).alias("cid"),
-        "s",
-        F.col("sub").alias("cw"),
-        F.col("sub_nsq").alias("cw_nsq"),
+    sub_dim, codewords = _pq_codewords(
+        df, corpus, m, n_codewords, vec_col, id_col, codebook
     )
     corpus_subs = _subspace_explode(corpus, m, sub_dim, id_col)
     dists = corpus_subs.join(F.broadcast(codewords), "s").select(
@@ -771,19 +745,10 @@ def cosine_range_search(
         F.col("qv").alias("q_qv"),
         F.col("nsq").alias("q_nsq"),
     )
-    return (
-        corpus.join(F.broadcast(qs), F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            cosine(
-                dot_long(F.col("q_qv"), F.col("qv")),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _neighbor_cosines(
+        corpus.join(F.broadcast(qs), F.col("query_id") != F.col(id_col)),
+        id_col,
+    ).filter(F.col("cosine") >= threshold)
 
 
 def mmr_diversified_topk(

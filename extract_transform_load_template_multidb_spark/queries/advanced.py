@@ -3542,7 +3542,9 @@ FROM contrib
 
 
 @query("agg_hill_tail_index_top200", oracle=_HILL_ORACLE)
-def agg_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+def agg_hill_tail_index_top200(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
     """Hill estimator of the order-value tail index: mean log-excess of
     the top-200 order totals over the 201st — α below ~2 means the
     revenue tail is heavy enough that mean-based capacity planning
@@ -4059,7 +4061,9 @@ FROM w
 
 
 @query("agg_diff_in_differences_orders", oracle=_DID_ORACLE)
-def agg_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
+def agg_diff_in_differences_orders(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
     """Difference-in-differences: BUILDING (treated) vs MACHINERY
     (control) mean order value before/after a 1996 cutoff — the causal
     panel estimator that nets out both the level gap between segments

@@ -928,8 +928,8 @@ def dedup_clusters_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the ngram near-dup pairs: the transitive
     closure a dedup pipeline needs to keep ONE doc per duplicate cluster
     (A~B, B~C collapse together even though A~C was never a candidate).
-    Spark side: iterative min-label propagation (joins + groupBy per
-    round, localCheckpoint-truncated lineage); oracle: recursive CTE."""
+    Spark side: two-phase union-find (partition-local contraction, then
+    driver union-find over the small forest); oracle: recursive CTE."""
     pairs = dd.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), n=3, threshold=0.2
     )
@@ -938,16 +938,17 @@ def dedup_clusters_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dedup_clusters_star", oracle=_CLUSTERS_ORACLE)
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same transitive closure as dedup_clusters_ngram, computed with the
-    alternating large-star/small-star contraction (O(log n) rounds
-    independent of graph diameter — the strategy for chain/mesh-shaped
-    pair graphs where label propagation's O(diameter) rounds blow up;
-    see operators/dedup.py:_cc_star_contraction). Identical output by
-    construction, proven against the same recursive-CTE oracle."""
+    """Same transitive closure as dedup_clusters_ngram with the driver
+    gate off (``small_graph_edges=0``): the contracted forest closes by
+    alternating large-star/small-star contraction (O(log n) distributed
+    rounds independent of graph diameter — the closure for a forest too
+    big for the driver; see operators/dedup.py:_cc_star_contraction).
+    Identical output by construction, proven against the same
+    recursive-CTE oracle."""
     pairs = dd.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), n=3, threshold=0.2
     )
-    return dd.connected_components(pairs, algorithm="star")
+    return dd.connected_components(pairs, small_graph_edges=0)
 
 
 _MH_CLUSTERS_ORACLE = (

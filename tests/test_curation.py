@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from extract_transform_load_template_multidb_spark.operators import curation as cu
+from extract_transform_load_template_multidb_spark.operators import dedup as dd
+from extract_transform_load_template_multidb_spark.operators import layout
 
 
 def _docs(spark, sf_dir):
@@ -120,22 +122,14 @@ def test_curation_stays_jvm_side(spark, sf_dir):
 @pytest.mark.parametrize(
     "cc_kwargs",
     [
-        {"small_graph_edges": 4_000_000},   # driver union-find fast path
-        {"small_graph_edges": 0},           # auto big-graph: two-phase
-        {"algorithm": "label", "small_graph_edges": 0},  # label prop
-        {"algorithm": "star"},              # large-star/small-star
-        {"algorithm": "local"},             # forced driver union-find
-        {"algorithm": "two_phase"},         # filtering contraction
-        # two-phase with the driver fallback disabled: phase 2 runs the
-        # distributed star contraction over the phase-1 forest.
-        {"algorithm": "two_phase", "small_graph_edges": 0},
+        {},                       # closure over the forest: driver union-find
+        {"small_graph_edges": 0},  # closure over the forest: star contraction
     ],
 )
 def test_connected_components_chain_and_cliques(spark, cc_kwargs):
-    """A 4-chain (diameter > 1 — needs multiple propagation rounds), a
-    triangle, and an isolated pair each collapse to their min id — on
-    every strategy: driver union-find, distributed label propagation, and
-    star contraction."""
+    """A 4-chain (diameter > 1), a triangle, and an isolated pair each
+    collapse to their min id — under both closures of the two-phase
+    contraction: driver union-find and distributed star contraction."""
     from extract_transform_load_template_multidb_spark.operators import (
         dedup as dd,
     )
@@ -155,6 +149,43 @@ def test_connected_components_chain_and_cliques(spark, cc_kwargs):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1,
                    10: 10, 11: 10, 12: 10,
                    20: 20, 21: 20}
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        pytest.param(lambda df: cu.hash_sample(df, 101), id="hash_sample"),
+        pytest.param(
+            lambda df: cu.stratified_sample(df, "source", {"web": -1}),
+            id="stratified_sample",
+        ),
+        pytest.param(lambda df: cu.group_split(df, "source", 150),
+                     id="group_split"),
+        pytest.param(lambda df: cu.chunk_documents(df, 16, 16),
+                     id="chunk_documents"),
+        pytest.param(lambda df: cu.mixture_sample(df, {"web": -0.5}),
+                     id="mixture_sample"),
+        pytest.param(lambda df: layout.z_value([F.col("doc_id")] * 4, 16),
+                     id="z_value"),
+        pytest.param(lambda df: dd.lsh_bands(df, num_perm=8, rows_per_band=3),
+                     id="lsh_bands"),
+        pytest.param(lambda df: dd.simhash(df, bits=33), id="simhash"),
+        pytest.param(
+            lambda df: dd.simhash_pairs(df, n_bands=4, max_hamming=4),
+            id="simhash_pairs_pigeonhole",
+        ),
+        pytest.param(lambda df: dd.simhash_pairs(df, bits=30, n_bands=4),
+                     id="simhash_pairs_band_width"),
+    ],
+)
+def test_operator_contract_checks_raise_value_error(spark, call):
+    """Arguments outside an operator's contract raise ValueError, which
+    ``python -O`` cannot strip the way it strips an ``assert``."""
+    df = spark.createDataFrame(
+        [(1, "a b c", "web")], "doc_id bigint, text string, source string"
+    )
+    with pytest.raises(ValueError):
+        call(df)
 
 
 def test_dedup_keep_canonical_drops_cluster_losers(spark):
@@ -187,28 +218,24 @@ def test_connected_components_raises_on_nonconvergence(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], "id_a bigint, id_b bigint"
     )
-    # algorithm="label" pins the distributed propagation loop — the
-    # union-find fast path has no iteration budget to exhaust, and
-    # auto's big-graph path is now two_phase (whose phase-1 contraction
-    # can collapse a short chain before the budget matters).
+    # small_graph_edges=0 sends the contracted forest to the star
+    # closure, whose round budget is max_iter (the driver union-find has
+    # none to exhaust). One round cannot confirm convergence: that takes
+    # two equal round signatures.
     with _pytest.raises(RuntimeError, match="did not converge"):
-        dd.connected_components(
-            chain, max_iter=2, small_graph_edges=0, algorithm="label"
-        )
+        dd.connected_components(chain, max_iter=1, small_graph_edges=0)
     # and converges fine with enough rounds
     got = dd.connected_components(
-        chain, max_iter=10, small_graph_edges=0, algorithm="label"
+        chain, max_iter=10, small_graph_edges=0
     ).collect()
     assert all(r["component"] == 0 for r in got)
 
 
-def test_star_contraction_beats_label_on_path_graph(spark):
-    """The reason algorithm="star" exists: a 64-node path graph has
-    diameter 63, so label propagation cannot finish inside 25 rounds
-    (min labels travel one hop per round) while star contraction's
-    O(log n) rounds finish comfortably inside 15."""
-    import pytest as _pytest
-
+def test_star_closure_finishes_path_graph(spark):
+    """A 64-node path graph has diameter 63, yet star contraction
+    (O(log n) rounds, independent of diameter) labels it inside 15
+    rounds — both as connected_components' distributed closure and on
+    the raw path, where no phase-1 contraction has flattened it first."""
     from extract_transform_load_template_multidb_spark.operators import (
         dedup as dd,
     )
@@ -216,29 +243,22 @@ def test_star_contraction_beats_label_on_path_graph(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id_a bigint, id_b bigint"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dd.connected_components(
-            chain, algorithm="label", small_graph_edges=0, max_iter=25
-        )
+    want = {i: 0 for i in range(64)}
     got = {
         r["node"]: r["component"]
         for r in dd.connected_components(
-            chain, algorithm="star", max_iter=15
+            chain, small_graph_edges=0, max_iter=15
         ).collect()
     }
-    assert got == {i: 0 for i in range(64)}
-
-
-def test_connected_components_rejects_unknown_algorithm(spark):
-    import pytest as _pytest
-
-    from extract_transform_load_template_multidb_spark.operators import (
-        dedup as dd,
+    assert got == want
+    raw = chain.select(
+        F.col("id_b").alias("src"), F.col("id_a").alias("dst")
     )
-
-    pairs = spark.createDataFrame([(1, 2)], "id_a bigint, id_b bigint")
-    with _pytest.raises(ValueError, match="unknown algorithm"):
-        dd.connected_components(pairs, algorithm="bogus")
+    got = {
+        r["node"]: r["component"]
+        for r in dd._cc_star_contraction(raw, 15).collect()
+    }
+    assert got == want
 
 
 # ---------------------------------------------------------------------------
@@ -481,7 +501,7 @@ def test_two_phase_cc_many_partitions_dups_and_selfloops(spark):
     got = {
         r["node"]: r["component"]
         for r in dd.connected_components(
-            pairs, algorithm="two_phase", small_graph_edges=0
+            pairs, small_graph_edges=0
         ).collect()
     }
     want = {i: 0 for i in range(120)}
@@ -515,7 +535,7 @@ def test_two_phase_cc_iterated_contraction_reaches_driver_gate(spark):
         got = {
             r["node"]: r["component"]
             for r in dd.connected_components(
-                pairs, algorithm="two_phase", small_graph_edges=500
+                pairs, small_graph_edges=500
             ).collect()
         }
     finally:

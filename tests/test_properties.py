@@ -216,97 +216,6 @@ def test_hash_sample_monotone_in_pct(spark, rows, pct_small, pct_big_delta):
     } == {r[0] for r in rows}
 
 
-@given(
-    pairs=st.lists(
-        st.tuples(st.integers(0, 15), st.integers(0, 15)),
-        min_size=1,
-        max_size=25,
-    ).filter(lambda ps: any(a != b for a, b in ps))
-)
-@settings(**_SETTINGS)
-def test_connected_components_match_python_union_find(spark, pairs):
-    """Spark min-label propagation agrees with a pure-Python union-find
-    on arbitrary graphs."""
-    pairs = [(a, b) for a, b in pairs if a != b]
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    for a, b in pairs:
-        union(a, b)
-    want = {n: find(n) for n in parent}
-
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    # Pin the distributed label-propagation loop: the small-graph fast
-    # path IS a union-find, so testing it against one proves little
-    # (and auto's big-graph route is two_phase since round 10).
-    got = {
-        r["node"]: r["component"]
-        for r in dd.connected_components(
-            df, small_graph_edges=0, algorithm="label"
-        ).collect()
-    }
-    assert got == want
-
-
-@given(
-    pairs=st.lists(
-        st.tuples(st.integers(0, 15), st.integers(0, 15)),
-        min_size=1,
-        max_size=25,
-    ).filter(lambda ps: any(a != b for a, b in ps))
-)
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_star_contraction_matches_python_union_find(spark, pairs):
-    """Star contraction agrees with a pure-Python union-find on arbitrary
-    graphs (fewer examples than the label-prop twin: each star example
-    pays several convergence-check actions)."""
-    pairs = [(a, b) for a, b in pairs if a != b]
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = {
-        r["node"]: r["component"]
-        for r in dd.connected_components(df, algorithm="star").collect()
-    }
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# Connected-components: all three strategies agree on random graphs
-# ---------------------------------------------------------------------------
-
-_edges_strategy = st.lists(
-    st.tuples(st.integers(0, 24), st.integers(0, 24)),
-    min_size=1,
-    max_size=50,
-).filter(lambda es: any(a != b for a, b in es))
-
-
 def _py_components(edges):
     """Pure-Python union-find ground truth: node → min reachable id."""
     parent: dict = {}
@@ -328,25 +237,79 @@ def _py_components(edges):
     return {n: find(n) for n in parent}
 
 
+_edges_strategy = st.lists(
+    st.tuples(st.integers(0, 24), st.integers(0, 24)),
+    min_size=1,
+    max_size=50,
+).filter(lambda es: any(a != b for a, b in es))
+
+_small_pairs_strategy = st.lists(
+    st.tuples(st.integers(0, 15), st.integers(0, 15)),
+    min_size=1,
+    max_size=25,
+).filter(lambda ps: any(a != b for a, b in ps))
+
+
+@given(pairs=_small_pairs_strategy)
+@settings(**_SETTINGS)
+def test_connected_components_match_python_union_find(spark, pairs):
+    """The default route — two-phase contraction closed by driver
+    union-find — agrees with a pure-Python union-find on arbitrary
+    graphs."""
+    pairs = [(a, b) for a, b in pairs if a != b]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {
+        r["node"]: r["component"]
+        for r in dd.connected_components(df).collect()
+    }
+    assert got == _py_components(pairs)
+
+
+@given(pairs=_small_pairs_strategy)
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_star_contraction_matches_python_union_find(spark, pairs):
+    """The distributed route — two-phase contraction closed by star
+    contraction (``small_graph_edges=0``) — agrees with a pure-Python
+    union-find on arbitrary graphs (fewer examples than the driver-closure
+    twin: each star example pays several convergence-check actions)."""
+    pairs = [(a, b) for a, b in pairs if a != b]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {
+        r["node"]: r["component"]
+        for r in dd.connected_components(df, small_graph_edges=0).collect()
+    }
+    assert got == _py_components(pairs)
+
+
 @given(edges=_edges_strategy)
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_cc_star_label_local_agree(spark, edges):
-    """Star contraction, label propagation, and driver union-find must
-    produce identical (node → min-id component) labelings on arbitrary
-    graphs — star/label are distributed rewrites of the same closure, and
-    a divergence on any random graph is a correctness bug in one of them
-    (only the 400-node path case was pinned before)."""
+    """Both closures — star contraction and driver union-find — produce
+    identical (node → min-id component) labelings whether they run on the
+    raw canonical pairs or on the two-phase forest: they are rewrites of
+    the same transitive closure, and a divergence on any random graph is
+    a correctness bug in one of them."""
     pairs = spark.createDataFrame(
         [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
     )
+    raw = pairs.select(
+        F.greatest("id_a", "id_b").alias("src"),
+        F.least("id_a", "id_b").alias("dst"),
+    )
     expected = _py_components(edges)
-    for algo in ("star", "label", "local", "two_phase"):
-        got = {
-            r["node"]: r["component"]
-            for r in dd.connected_components(pairs, algorithm=algo).collect()
-        }
-        assert got == expected, algo
+    routes = {
+        "star_raw": dd._cc_star_contraction(raw, 25),
+        "local_raw": dd._cc_union_find_local(raw),
+        "two_phase_local": dd.connected_components(pairs),
+        "two_phase_star": dd.connected_components(
+            pairs, small_graph_edges=0
+        ),
+    }
+    for name, comps in routes.items():
+        got = {r["node"]: r["component"] for r in comps.collect()}
+        assert got == expected, name
 
 
 @given(

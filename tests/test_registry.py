@@ -44,6 +44,36 @@ def test_no_oracle_emits_nested_output_columns():
     assert bad == {}, bad
 
 
+def test_builder_names_match_registry_and_never_shadow():
+    """A second top-level ``def`` of one name silently rebinds the first:
+    ``advanced.agg_hill_tail_index`` once named only the later of two
+    builders. Every builder's ``__name__`` must be its registry name, and
+    no package module may define one top-level name twice (checked with
+    ``ast``, since the repo runs no linter)."""
+    import ast
+    import pathlib
+
+    import extract_transform_load_template_multidb_spark as pkg
+
+    misnamed = {
+        name: fn.__name__
+        for name, fn in all_queries().items()
+        if fn.__name__ != name
+    }
+    assert misnamed == {}, misnamed
+    shadowed = []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        seen: set[str] = set()
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                if node.name in seen:
+                    shadowed.append(f"{path.name}:{node.lineno} {node.name}")
+                seen.add(node.name)
+    assert shadowed == [], shadowed
+
+
 def test_check_first_names_exist():
     """A typo'd priority name is silently filtered out of the window —
     every entry must be a real registered query."""
