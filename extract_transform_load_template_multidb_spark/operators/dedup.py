@@ -1067,10 +1067,13 @@ def _cc_star_contraction(edges: DataFrame, max_iter: int) -> DataFrame:
     function, and the fixed point is a disjoint union of stars centered
     at each component's minimum id. Convergence is detected by an
     (edge-count, order-insensitive checksum) pair riding the same action
-    that materializes the round's checkpoint — one job per round. Per
-    round the cost is two groupBys + one dedup over |E| (~3 shuffles),
-    which is why :func:`_cc_two_phase` runs it only over a contracted
-    forest too big for the driver.
+    that materializes the round's checkpoint — one job per round. The
+    input's pair rides the action that materializes its own checkpoint,
+    so an input that is already stars (as :func:`_cc_two_phase`'s
+    contraction often leaves it) stops after the one round that leaves
+    it unchanged. Per round the cost is two groupBys + one dedup over
+    |E| (~3 shuffles), which is why :func:`_cc_two_phase` runs it only
+    over a contracted forest too big for the driver.
 
     ``edges`` is the canonical (src ≥ dst) forest, duplicates and
     self-rows tolerated: the first filter below takes the src > dst view
@@ -1078,11 +1081,22 @@ def _cc_star_contraction(edges: DataFrame, max_iter: int) -> DataFrame:
     seen only in self-rows are restored by the lonely anti-join at the
     end. Output: (node, component).
     """
+
+    def materialize(df: DataFrame) -> tuple[DataFrame, tuple]:
+        """Checkpoint ``df`` and take its (edge count, order-insensitive
+        checksum) signature, in one action."""
+        df = df.localCheckpoint(eager=False)
+        row = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(
+                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")),
+                F.lit(0).cast("decimal(38,0)"),
+            ).alias("sig"),
+        ).first()
+        return df, (row["n"], row["sig"])
+
     # Canonical undirected form: src > dst (every edge once, larger first).
-    cur = edges.filter(F.col("src") > F.col("dst")).localCheckpoint(
-        eager=True
-    )
-    prev_sig: tuple = (-1, -1)
+    cur, prev_sig = materialize(edges.filter(F.col("src") > F.col("dst")))
     for _ in range(max_iter):
         sym = cur.unionByName(
             cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1110,23 +1124,12 @@ def _cc_star_contraction(edges: DataFrame, max_iter: int) -> DataFrame:
             )
             .filter(F.col("src") != F.col("dst"))
         )
-        cur = (
+        cur, sig = materialize(
             small.select(
                 F.greatest("src", "dst").alias("src"),
                 F.least("src", "dst").alias("dst"),
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
+            ).distinct()
         )
-        # One action: materialize checkpoint + convergence signature.
-        row = cur.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("sig"),
-        ).first()
-        sig = (row["n"], row["sig"])
         if sig == prev_sig:
             break
         prev_sig = sig

@@ -208,27 +208,62 @@ def test_dedup_keep_canonical_drops_cluster_losers(spark):
     assert kept == [1, 4, 10, 99]
 
 
-def test_connected_components_raises_on_nonconvergence(spark):
+def test_connected_components_raises_on_nonconvergence(spark, monkeypatch):
     import pytest as _pytest
 
     from extract_transform_load_template_multidb_spark.operators import (
         dedup as dd,
     )
 
+    # A 64-node chain in 8 slices. Phase 1 contracts each slice to a star
+    # of its own, and neighbouring slices share an end node, so the forest
+    # is a chain of stars that the first star round still rewrites. A
+    # one-row partition budget stops the repartitioned contraction passes,
+    # which would otherwise flatten so small a forest into one star.
+    monkeypatch.setattr(dd, "_CONTRACT_ROWS_PER_PART", 1)
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(8)], "id_a bigint, id_b bigint"
+        spark.sparkContext.parallelize([(i, i + 1) for i in range(63)], 8),
+        "id_a bigint, id_b bigint",
     )
     # small_graph_edges=0 sends the contracted forest to the star
     # closure, whose round budget is max_iter (the driver union-find has
-    # none to exhaust). One round cannot confirm convergence: that takes
-    # two equal round signatures.
+    # none to exhaust). A round that changes the edge set cannot confirm
+    # convergence: that takes a round that leaves it unchanged.
     with _pytest.raises(RuntimeError, match="did not converge"):
         dd.connected_components(chain, max_iter=1, small_graph_edges=0)
     # and converges fine with enough rounds
     got = dd.connected_components(
         chain, max_iter=10, small_graph_edges=0
     ).collect()
+    assert sorted(r["node"] for r in got) == list(range(64))
     assert all(r["component"] == 0 for r in got)
+
+
+def test_star_closure_stops_on_star_forest(spark, count_jobs):
+    """A forest that phase 1 already flattened to exact stars is the star
+    closure's fixed point: one round confirms it, because the input's own
+    signature is taken with its checkpoint."""
+    from extract_transform_load_template_multidb_spark.operators import (
+        dedup as dd,
+    )
+
+    # Two stars, one partition: the contraction emits them unchanged.
+    pairs = spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            [(0, i) for i in range(1, 9)] + [(100, i) for i in range(101, 105)],
+            1,
+        ),
+        "id_a bigint, id_b bigint",
+    )
+    got, jobs = count_jobs(
+        lambda: dd.connected_components(
+            pairs, max_iter=1, small_graph_edges=0
+        ).collect()
+    )
+    want = {i: 0 for i in range(9)} | {i: 100 for i in range(100, 105)}
+    assert {r["node"]: r["component"] for r in got} == want
+    # A closure that runs a second, confirming round takes 26 jobs here.
+    assert jobs < 26, jobs
 
 
 def test_star_closure_finishes_path_graph(spark):
