@@ -2,13 +2,25 @@
 
 Scale posture: AQE on (runtime re-plan, skew-join splitting, partition
 coalescing), UTC session timezone (deterministic timestamp semantics vs the
-DuckDB oracle), Arrow enabled for the few pandas-UDF operators, and a
+DuckDB oracle), Arrow enabled for the few pandas-UDF operators, a
 generated-code cache of 1024 classes (Spark's default 100 cannot hold the
 classes of a session cycling through a dozen queries; 1024 hold those of
-~85 queries in ~25 MB of metaspace, see get_spark). On a real cluster
-only ``master``/``shuffle_partitions`` change; every query in this repo is
-expressed declaratively so Catalyst can re-plan for 1000 executors without
-code changes.
+~85 queries in ~25 MB of metaspace, see get_spark), and Python workers
+forked from the engine's own daemon (``worker_daemon``: a one-row Python
+task reaches user code in ~30 ms instead of 150-240 ms), with this
+package on the workers' ``PYTHONPATH`` so that they can import it.
+
+Both the cache size and the daemon are launch-time confs. A session the
+engine did not build keeps Spark's 100-entry cache and pyspark's own
+daemon. To get the engine's, submit it with
+``--conf spark.sql.codegen.cache.maxEntries=1024`` and
+``--conf spark.python.daemon.module=<package>.worker_daemon``, and put
+this package's parent directory on the workers' ``PYTHONPATH``
+(``--conf spark.executorEnv.PYTHONPATH=...``).
+
+On a real cluster only ``master``/``shuffle_partitions`` change; every
+query in this repo is expressed declaratively so Catalyst can re-plan for
+1000 executors without code changes.
 """
 
 from __future__ import annotations
@@ -17,6 +29,14 @@ import os
 import threading
 
 from pyspark.sql import SparkSession
+
+# The directory holding this package: Python workers must import it, since
+# they start from its worker_daemon.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+# Named, not imported: ``python -m`` runs it as __main__, and a copy already
+# imported by this package would shadow it.
+_WORKER_DAEMON = f"{__package__}.worker_daemon"
 
 # Session-level defaults applied both when we build the session ourselves and
 # when the driver hands us one (see ensure_conf).
@@ -89,9 +109,11 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
     repeat calls are one py4j round-trip and a dict lookup, not five.
 
     Only runtime-settable keys can be applied here. A session the engine
-    did not build keeps Spark's 100-entry generated-code cache, a static
-    conf fixed at launch: submit it with
-    ``--conf spark.sql.codegen.cache.maxEntries=1024`` (see get_spark).
+    did not build keeps Spark's 100-entry generated-code cache and
+    pyspark's own worker daemon, static confs fixed at launch: submit it
+    with ``--conf spark.sql.codegen.cache.maxEntries=1024`` and
+    ``--conf spark.python.daemon.module=<package>.worker_daemon``, with
+    the package on the workers' ``PYTHONPATH`` (see the module docstring).
     """
     key = session_key(spark)
     if memo_get(_CONF_APPLIED, key):
@@ -141,7 +163,9 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (fallback
-    ``local[*]``) so tests and bench share one code path.
+    ``local[*]``) so tests and bench share one code path. A
+    ``spark.executorEnv.PYTHONPATH`` in ``extra_conf`` is kept, after this
+    package's parent directory.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -164,7 +188,7 @@ def get_spark(
         # keep shuffle/spill off disk entirely — our shuffle volumes are
         # a few GB against a 100+ GB /dev/shm.
         .config("spark.shuffle.file.buffer", "1m")
-        .config("spark.shuffle.unsafe.file.output.buffer", "1m")
+        .config("spark.shuffle.localDisk.file.output.buffer", "1m")
         .config("spark.io.compression.lz4.blockSize", "512k")
         # Generated-code cache: a static SQL conf that CodeGenerator reads
         # once per JVM, so it must be set here, not in _RUNTIME_CONF.
@@ -176,6 +200,12 @@ def get_spark(
         # each, so 1024 entries hold ~85 interleaved queries and cap the
         # cache at ~25 MB.
         .config("spark.sql.codegen.cache.maxEntries", "1024")
+        # Python workers fork from the engine's daemon, which skips
+        # pyspark's per-task re-read of its zip archives and the ~40 ms
+        # delayed-ACK stall (see worker_daemon): a one-row Python task
+        # reaches user code in ~30 ms instead of 150-240 ms. Read when the
+        # JVM starts its first Python worker, so it too is set here.
+        .config("spark.python.daemon.module", _WORKER_DAEMON)
     )
     shm = os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
     try:
@@ -185,8 +215,13 @@ def get_spark(
         pass  # fall back to Spark's default local dir
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    extra_conf = dict(extra_conf or {})
+    # Without this, a worker whose cwd and PYTHONPATH lack the checkout
+    # cannot start at all.
+    extra_conf[_WORKER_PYTHONPATH] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, extra_conf.get(_WORKER_PYTHONPATH)) if p
+    )
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return ensure_conf(spark)
