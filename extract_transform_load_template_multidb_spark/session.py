@@ -8,15 +8,25 @@ classes of a session cycling through a dozen queries; 1024 hold those of
 ~85 queries in ~25 MB of metaspace, see get_spark), and Python workers
 forked from the engine's own daemon (``worker_daemon``: a one-row Python
 task reaches user code in ~30 ms instead of 150-240 ms), with this
-package on the workers' ``PYTHONPATH`` so that they can import it.
+package on the workers' ``PYTHONPATH`` so that they can import it, and
+a ``file:`` file system that sets permission bits in-process
+(``jvm/NioLocalFileSystem.java``, prebuilt in ``jvm/nio-local-fs.jar``):
+without the native libhadoop, Hadoop's own forks ``chmod`` for every file
+and directory that a write or a streaming checkpoint creates.
 
-Both the cache size and the daemon are launch-time confs. A session the
-engine did not build keeps Spark's 100-entry cache and pyspark's own
-daemon. To get the engine's, submit it with
-``--conf spark.sql.codegen.cache.maxEntries=1024`` and
-``--conf spark.python.daemon.module=<package>.worker_daemon``, and put
-this package's parent directory on the workers' ``PYTHONPATH``
-(``--conf spark.executorEnv.PYTHONPATH=...``).
+The cache size, the daemon and the file system are launch-time confs. A
+session the engine did not build keeps Spark's 100-entry cache,
+pyspark's own daemon and Hadoop's shell ``chmod``. To get the engine's,
+submit it with ``--conf spark.sql.codegen.cache.maxEntries=1024``,
+``--conf spark.python.daemon.module=<package>.worker_daemon``,
+``--conf spark.hadoop.fs.file.impl=<package>.jvm.NioLocalFileSystem`` and
+``--conf spark.hadoop.fs.AbstractFileSystem.file.impl=<package>.jvm.NioLocalFileSystem$Fs``;
+put this package's parent directory on the workers' ``PYTHONPATH``
+(``--conf spark.executorEnv.PYTHONPATH=...``) and the jar on both class
+paths (``spark.driver.extraClassPath``, ``spark.executor.extraClassPath``).
+``get_spark`` under ``spark-submit`` gets a driver JVM that is already up:
+it names the engine's file system only if the jar is on that JVM's class
+path (``--driver-class-path``), and otherwise keeps Hadoop's.
 
 On a real cluster only ``master``/``shuffle_partitions`` change; every
 query in this repo is expressed declaratively so Catalyst can re-plan for
@@ -26,17 +36,36 @@ query in this repo is expressed declaratively so Catalyst can re-plan for
 from __future__ import annotations
 
 import os
+import re
 import threading
 
+from pyspark import SparkConf, SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
 # The directory holding this package: Python workers must import it, since
 # they start from its worker_daemon.
-_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_PARENT = os.path.dirname(_PACKAGE_DIR)
 # Named, not imported: ``python -m`` runs it as __main__, and a copy already
 # imported by this package would shadow it.
 _WORKER_DAEMON = f"{__package__}.worker_daemon"
+# The engine's ``file:`` file system, built from jvm/NioLocalFileSystem.java
+# (tests/test_session.py checks that the jar matches the source).
+_LOCAL_FS = f"{__package__}.jvm.NioLocalFileSystem"
+_LOCAL_FS_JAR = os.path.join(_PACKAGE_DIR, "jvm", "nio-local-fs.jar")
+# FileContext, which streaming checkpoints write through, resolves
+# ``file:`` on its own key.
+_LOCAL_FS_CONF = {
+    "spark.hadoop.fs.file.impl": _LOCAL_FS,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{_LOCAL_FS}$Fs",
+}
+# Path-list confs whose engine entry goes ahead of the caller's value.
+_ENGINE_PATHS = {
+    "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
+    "spark.driver.extraClassPath": _LOCAL_FS_JAR,
+    "spark.executor.extraClassPath": _LOCAL_FS_JAR,
+}
 
 # Session-level defaults applied both when we build the session ourselves and
 # when the driver hands us one (see ensure_conf).
@@ -109,11 +138,15 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
     repeat calls are one py4j round-trip and a dict lookup, not five.
 
     Only runtime-settable keys can be applied here. A session the engine
-    did not build keeps Spark's 100-entry generated-code cache and
-    pyspark's own worker daemon, static confs fixed at launch: submit it
-    with ``--conf spark.sql.codegen.cache.maxEntries=1024`` and
-    ``--conf spark.python.daemon.module=<package>.worker_daemon``, with
-    the package on the workers' ``PYTHONPATH`` (see the module docstring).
+    did not build keeps Spark's 100-entry generated-code cache, pyspark's
+    own worker daemon and Hadoop's shell ``chmod`` on every file it
+    writes, static confs fixed at launch: submit it with
+    ``--conf spark.sql.codegen.cache.maxEntries=1024``,
+    ``--conf spark.python.daemon.module=<package>.worker_daemon`` and
+    ``--conf spark.hadoop.fs.file.impl=<package>.jvm.NioLocalFileSystem``
+    (plus its ``fs.AbstractFileSystem.file.impl`` twin), with the package
+    on the workers' ``PYTHONPATH`` and ``jvm/nio-local-fs.jar`` on the
+    driver and executor class paths (see the module docstring).
     """
     key = session_key(spark)
     if memo_get(_CONF_APPLIED, key):
@@ -126,6 +159,73 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
             pass
     memo_put(_CONF_APPLIED, key, spark, True)
     return spark
+
+
+def engine_paths_first(
+    conf: dict[str, str], defaults: dict[str, str] | None = None
+) -> dict[str, str]:
+    """``conf`` with the engine's entry first on each path-list key of
+    ``_ENGINE_PATHS``: the package on the workers' ``PYTHONPATH`` (without
+    it, a worker whose cwd and ``PYTHONPATH`` lack the checkout cannot
+    start at all) and the file-system jar on both class paths. The value
+    the key would have had without the engine follows: the caller's in
+    ``conf``, else the one in ``defaults`` (``spark-defaults.conf`` or
+    spark-submit's, where a JDBC driver jar usually sits)."""
+    conf = dict(conf)
+    defaults = defaults or {}
+    for key, entry in _ENGINE_PATHS.items():
+        value = conf.get(key, defaults.get(key)) or ""
+        rest = [p for p in value.split(os.pathsep) if p and p != entry]
+        conf[key] = os.pathsep.join([entry, *rest])
+    return conf
+
+
+# One ``key value``, ``key=value`` or ``key: value`` line of a Java
+# properties file; ``#`` and ``!`` start comments.
+_PROPERTY = re.compile(r"([^#!\s=:][^\s=:]*)\s*[=:]?\s*(.*)")
+
+
+def _spark_defaults_file() -> dict[str, str]:
+    """``spark-defaults.conf`` in ``$SPARK_CONF_DIR``, else in
+    ``$SPARK_HOME/conf``, where spark-submit looks for it; empty if there
+    is none."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        _find_spark_home(), "conf"
+    )
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf"), encoding="utf-8") as fh:
+            lines = fh.read().splitlines()
+    except OSError:
+        return {}
+    return {m[1]: m[2].strip() for m in map(_PROPERTY.fullmatch, map(str.strip, lines)) if m}
+
+
+def _driver_jvm_conf(conf: dict[str, str], extra_conf: dict[str, str]) -> dict[str, str]:
+    """The ``spark.*`` confs that the driver JVM started with, after
+    starting pyspark's with ``conf`` and the engine's path entries unless
+    one is up (spark-submit's, or one an earlier session started).
+
+    Those confs hold the class paths of ``spark-defaults.conf``,
+    spark-submit's ``--driver-class-path`` and ``PYSPARK_SUBMIT_ARGS``,
+    which the builder's would replace. ``spark-submit`` reads
+    ``spark-defaults.conf`` when pyspark launches it, but the builder's
+    ``--conf`` wins, so the launch puts the file's value after the
+    engine's entry by hand.
+    """
+    if SparkContext._jvm is None:
+        launch = {**conf, **engine_paths_first(extra_conf, _spark_defaults_file())}
+        SparkContext._ensure_initialized(conf=SparkConf().setAll(launch.items()))
+    return dict(SparkConf().getAll())
+
+
+def _driver_loads_local_fs() -> bool:
+    """Whether the driver JVM can load the engine's file-system class. One
+    that was up without the jar (spark-submit's, unless the jar is on its
+    ``--driver-class-path``), or whose class path a ``--driver-class-path``
+    in ``PYSPARK_SUBMIT_ARGS`` replaced, cannot: naming the class there
+    would fail every ``file:`` read and write."""
+    hadoop_conf = SparkContext._jvm.org.apache.hadoop.conf.Configuration(False)
+    return hadoop_conf.getClassByNameOrNull(_LOCAL_FS) is not None
 
 
 def _default_driver_memory() -> str:
@@ -163,9 +263,18 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (fallback
-    ``local[*]``) so tests and bench share one code path. A
-    ``spark.executorEnv.PYTHONPATH`` in ``extra_conf`` is kept, after this
-    package's parent directory.
+    ``local[*]``) so tests and bench share one code path. On
+    ``spark.executorEnv.PYTHONPATH``, ``spark.driver.extraClassPath`` and
+    ``spark.executor.extraClassPath`` the engine's entry goes first, and
+    the value from ``extra_conf``, else the one the driver JVM started
+    with (from ``spark-defaults.conf``, spark-submit or
+    ``PYSPARK_SUBMIT_ARGS``), is kept after it (see ``engine_paths_first``).
+
+    The engine's ``file:`` file system is named only when the driver JVM
+    can load it. A JVM that this call launches gets the jar on its class
+    path; spark-submit's gets it only from ``--driver-class-path``, and a
+    ``--driver-class-path`` in ``PYSPARK_SUBMIT_ARGS`` replaces it. Such
+    sessions keep Hadoop's file system and its shell ``chmod``.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -173,23 +282,23 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+    conf = {
+        "spark.app.name": app_name,
+        "spark.master": master,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.ui.enabled": "false",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # JVM-launch-time setting: only effective when this call actually
         # creates the session (true for bench.py and tests, which build the
         # session before any other Spark use).
-        .config("spark.driver.memory", _default_driver_memory())
+        "spark.driver.memory": _default_driver_memory(),
         # Shuffle I/O: larger write buffers cut syscall count (this host
         # taxes syscalls heavily in bursts), and tmpfs-backed local dirs
         # keep shuffle/spill off disk entirely — our shuffle volumes are
         # a few GB against a 100+ GB /dev/shm.
-        .config("spark.shuffle.file.buffer", "1m")
-        .config("spark.shuffle.localDisk.file.output.buffer", "1m")
-        .config("spark.io.compression.lz4.blockSize", "512k")
+        "spark.shuffle.file.buffer": "1m",
+        "spark.shuffle.localDisk.file.output.buffer": "1m",
+        "spark.io.compression.lz4.blockSize": "512k",
         # Generated-code cache: a static SQL conf that CodeGenerator reads
         # once per JVM, so it must be set here, not in _RUNTIME_CONF.
         # Spark's 100 entries are fewer than the ~165 classes that a cycle
@@ -199,29 +308,28 @@ def get_spark(
         # compiled 6,870 classes (~12 per query) at ~25 KB of metaspace
         # each, so 1024 entries hold ~85 interleaved queries and cap the
         # cache at ~25 MB.
-        .config("spark.sql.codegen.cache.maxEntries", "1024")
+        "spark.sql.codegen.cache.maxEntries": "1024",
         # Python workers fork from the engine's daemon, which skips
         # pyspark's per-task re-read of its zip archives and the ~40 ms
         # delayed-ACK stall (see worker_daemon): a one-row Python task
         # reaches user code in ~30 ms instead of 150-240 ms. Read when the
         # JVM starts its first Python worker, so it too is set here.
-        .config("spark.python.daemon.module", _WORKER_DAEMON)
-    )
+        "spark.python.daemon.module": _WORKER_DAEMON,
+    }
     shm = os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
     try:
         os.makedirs(shm, exist_ok=True)
-        builder = builder.config("spark.local.dir", shm)
+        conf["spark.local.dir"] = shm
     except OSError:
         pass  # fall back to Spark's default local dir
-    for k, v in _RUNTIME_CONF.items():
-        builder = builder.config(k, v)
-    extra_conf = dict(extra_conf or {})
-    # Without this, a worker whose cwd and PYTHONPATH lack the checkout
-    # cannot start at all.
-    extra_conf[_WORKER_PYTHONPATH] = os.pathsep.join(
-        p for p in (_PACKAGE_PARENT, extra_conf.get(_WORKER_PYTHONPATH)) if p
-    )
-    for k, v in extra_conf.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    conf.update(_RUNTIME_CONF)
+    extra_conf = extra_conf or {}
+    caller = engine_paths_first(extra_conf, _driver_jvm_conf(conf, extra_conf))
+    # Local files get their permission bits from java.nio, not from a
+    # forked ``chmod`` (~2 ms each; a one-task parquet write creates ~9
+    # files and directories), when the driver JVM has the jar.
+    if _driver_loads_local_fs():
+        conf.update(_LOCAL_FS_CONF)
+    conf.update(caller)
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     return ensure_conf(spark)
