@@ -5,9 +5,9 @@
 - :func:`minhash_signatures` — k-permutation MinHash where each permutation
   is "lexicographic min of md5(i:word)"; a string-min is a valid uniform
   min-hash and is reproducible in any engine with md5.
-- :func:`lsh_bands` / :func:`lsh_candidate_pairs` /
-  :func:`banded_unique_pairs` — banding + skew-proof blocked per-bucket
-  pair generation.
+- :func:`banded_unique_pairs` — candidate pairs sharing a band bucket,
+  each emitted once (at its minimum shared band), with the skew-proof
+  expansion of :func:`expand_sorted_array_pairs`.
 - :func:`jaccard_pairs` — exact word-set Jaccard for candidate verification.
 - :func:`near_dup_pairs` / :func:`incremental_near_dups` — the
   MinHash→LSH→verify pipeline, batch and delta-vs-corpus.
@@ -24,10 +24,13 @@ Every stage is a JVM-side DataFrame expression except the cluster
 closure, whose union-find runs in one Arrow-batched ``mapInPandas`` pass
 (and on the driver once the graph is contracted small).
 
-Scale notes: the only shuffles are the per-doc groupBys (keyed by doc id)
-and the band-bucket self-join, whose fan-out is bounded by bucket size; at
-100 TB you salt overfull buckets (a bucket with B docs yields B² candidate
-pairs — cap B and spill the rest to a second LSH round with different seeds).
+Scale notes: before verification, the only shuffles are the per-doc
+groupBys (keyed by doc id) and the band-bucket groupBy, which move doc
+and bucket rows, never candidate pairs. A bucket of B docs still yields
+B²/2 candidate pairs, all of them kept: buckets above ``BLOCK_SIZE``
+members are cut into ``BLOCK_SIZE`` slices whose slice pairs are spread
+round-robin over every core, so a degenerate bucket costs time in
+proportion to its pairs but never pins one core.
 """
 
 from __future__ import annotations
@@ -118,7 +121,9 @@ def _n_bands(num_perm: int, rows_per_band: int) -> int:
 
 
 def _band_hashes(num_perm: int, rows_per_band: int) -> list[Column]:
-    """Per band, ``xxhash64`` of its ``|``-joined ``sig_*`` rows."""
+    """Per band, ``xxhash64`` of its ``|``-joined ``sig_*`` rows. Only
+    equality of a band matters downstream, so an 8-byte bucket key beats
+    a hex digest."""
     return [
         F.xxhash64(
             F.concat_ws(
@@ -133,104 +138,41 @@ def _band_hashes(num_perm: int, rows_per_band: int) -> list[Column]:
     ]
 
 
-def lsh_bands(
-    sig_df: DataFrame,
-    id_col: str = "doc_id",
-    num_perm: int = 8,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """Band the signature: (id, band_idx, band_hash).
-
-    ``band_hash`` is ``xxhash64`` of the band's concatenated signature
-    rows: only *equality* of the banded signature matters downstream, so
-    an 8-byte join key beats a hex digest — the band self-join and the
-    candidate dedup shuffle dominate LSH cost on dup-heavy corpora.
-    """
-    bands = [
-        F.struct(F.lit(b).alias("band_idx"), h.alias("band_hash"))
-        for b, h in enumerate(_band_hashes(num_perm, rows_per_band))
-    ]
-    return sig_df.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_hash")
+# Largest sorted member array expanded to pairs in place; bigger arrays
+# are cut into slices of this many members (see expand_sorted_array_pairs).
+BLOCK_SIZE = 256
 
 
-def lsh_candidate_pairs(
-    bands_df: DataFrame,
-    id_col: str = "doc_id",
-    block_size: int = 256,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Distinct (id_a < id_b) pairs sharing any band bucket.
+def expand_sorted_array_pairs(arrays_df: DataFrame) -> DataFrame:
+    """All (id_a < id_b) pairs within each row's sorted ``__ids`` array.
+    Pairs across rows are NOT deduplicated here.
 
-    Hybrid per-bucket pair generator, never a naive band self-join: a
-    bucket of B docs yields B²/2 pairs, and with a self-join all of a hot
-    bucket's fan-out lands on the one task that owns its join key
-    (observed on the fixture corpus: one 3 921-doc bucket → 15.4M rows in
-    a single task while 31 cores idle; AQE cannot split skew *within* one
-    key). Buckets are collected into sorted member arrays, then split by
-    size:
+    A hybrid expansion, never a naive bucket self-join: an array of B ids
+    yields B²/2 pairs, and with a self-join all of a hot bucket's fan-out
+    lands on the one task that owns its join key (observed on the fixture
+    corpus: one 3 921-doc bucket → 15.4M rows in a single task while 31
+    cores idle; AQE cannot split skew *within* one key). Rows are split
+    by array size:
 
-    - **small buckets** (≤ ``block_size`` members — virtually all of them
+    - **small arrays** (≤ ``BLOCK_SIZE`` members — virtually all of them
       on a healthy corpus) expand to pairs in place with one explode
-      chain; their work is already spread evenly because the buckets
+      chain; their work is already spread evenly because the rows
       themselves are spread evenly across tasks. No extra shuffle.
-    - **large buckets** (the skewed tail) are cut into ``block_size``
-      chunks, the (i ≤ j) chunk-pairs exploded and round-robin
-      repartitioned — a few hundred small rows — and only then expanded to
-      id pairs, so one degenerate bucket's quadratic work lands on every
-      core instead of one.
+    - **large arrays** (the skewed tail) are cut into ``BLOCK_SIZE``
+      slices, the (i ≤ j) slice pairs exploded and round-robin
+      repartitioned — a few hundred small rows — and only then expanded
+      to id pairs, so one degenerate array's quadratic work lands on
+      every core instead of one.
 
-    Chunks come from a sorted array, so cross-chunk pairs satisfy
-    id_a < id_b by construction; only same-chunk expansion needs the
-    comparison. The hybrid exists because round-robin repartitioning ALL
-    block-pairs doubled wall-time at sf0.1 (31s → 70s): the extra shuffle
-    and the per-row array payload cost more than they saved for the 99% of
-    buckets that were never skewed.
-
-    At 100 TB the same shape holds: the heavy shuffle is the final
-    ``distinct`` over candidate pairs (irreducible — it IS the output),
-    while the bucket arrays stay bounded by the band-bucket size, which
-    degenerate stop-buckets permitting — cap or drop buckets above a size
-    threshold upstream if the corpus has them (they contribute no dedup
-    signal).
-    """
-    buckets = (
-        bands_df.groupBy("band_idx", "band_hash")
-        .agg(F.sort_array(F.collect_set(F.col(id_col))).alias("__ids"))
-        .filter(F.size("__ids") >= 2)
-    )
-    if max_bucket_size is not None:
-        # The 100 TB guardrail the docstring promises: a degenerate bucket
-        # of B docs costs B²/2 pairs while carrying almost no dedup signal
-        # (everything hashes together — typically boilerplate/stop
-        # content). Dropping such buckets bounds worst-case cost; pairs
-        # they would have contributed usually re-surface through the other
-        # bands. OFF by default — it is a recall-oriented approximation
-        # and the exact oracle-checked semantics require all buckets.
-        buckets = buckets.filter(F.size("__ids") <= max_bucket_size)
-    # Near-identical cliques collide in EVERY band, producing the same
-    # member array once per band; expanding each copy multiplies the pair
-    # stream feeding the distinct by up to the band count. Deduplicating
-    # the arrays first (a shuffle of bucket rows, thousands, not pairs,
-    # millions) drops that factor without changing the pair union.
-    return expand_sorted_array_pairs(
-        buckets.select("__ids").distinct(), block_size
-    ).distinct()
-
-
-def expand_sorted_array_pairs(
-    arrays_df: DataFrame, block_size: int = 256
-) -> DataFrame:
-    """All (id_a < id_b) pairs within each row's sorted ``__ids`` array —
-    the skew-proof hybrid expansion described in
-    :func:`lsh_candidate_pairs`. Rows with arrays ≤ ``block_size`` expand
-    in place; larger arrays go through the blocked + round-robin path so
-    one degenerate array cannot pin a core. Pairs across rows are NOT
-    deduplicated here.
+    Slices come from a sorted array, so cross-slice pairs satisfy
+    id_a < id_b by construction; only same-slice expansion needs the
+    comparison. The split exists because round-robin repartitioning ALL
+    slice pairs doubled wall-time at sf0.1 (31s → 70s): the extra shuffle
+    and the per-row array payload cost more than they saved for the 99%
+    of buckets that were never skewed.
     """
     small, big = _expand_sorted(
-        arrays_df, "__ids", block_size, "id_a", "id_b", lambda v: v
+        arrays_df, "__ids", "id_a", "id_b", lambda v: v
     )
     return small.unionByName(big)
 
@@ -238,7 +180,6 @@ def expand_sorted_array_pairs(
 def _expand_sorted(
     arrays: DataFrame,
     arr: str,
-    block_size: int,
     a: str,
     b: str,
     key: Callable[[Column], Column],
@@ -246,13 +187,13 @@ def _expand_sorted(
 ) -> tuple[DataFrame, DataFrame]:
     """(small, big) member-pair streams of each row's array column
     ``arr``, sorted by ``key``: every (a, b) with key(a) < key(b), beside
-    the ``keep`` columns. Arrays of ≤ ``block_size`` members expand in
-    place (``small``); larger ones are cut into ``block_size`` slices
+    the ``keep`` columns. Arrays of ≤ ``BLOCK_SIZE`` members expand in
+    place (``small``); larger ones are cut into ``BLOCK_SIZE`` slices
     whose (i ≤ j) slice pairs are round-robin repartitioned before they
     expand (``big``), so one degenerate array cannot pin a core. Slices
     come from a sorted array, so only same-slice pairs need the key
     comparison."""
-    c = int(block_size)
+    c = BLOCK_SIZE
 
     def later(y: Column) -> Column:
         return key(y) > key(F.col(a))
@@ -296,53 +237,35 @@ def _expand_sorted(
 
 
 def banded_unique_pairs(
-    bands_all: DataFrame,
-    id_col: str = "doc_id",
-    n_bands: int | None = None,
-    block_size: int = 256,
-    max_bucket_size: int | None = None,
+    bands_all: DataFrame, id_col: str = "doc_id", *, n_bands: int
 ) -> DataFrame:
     """Banded-LSH candidate pairs with **no distinct() exchange**: each
     (id_a < id_b) pair sharing ≥1 band hash positionally is emitted
     EXACTLY ONCE — at its minimum shared band.
 
     ``bands_all`` is one row per doc: ``(id_col, __bhs: array<bigint>)``,
-    the doc's band-hash vector (``n_bands`` long; defaults to the array
-    length taken from a literal-sized ``F.array`` schema is not possible,
-    so pass it explicitly). Per band, docs sharing the band's hash form a
-    bucket (exactly :func:`lsh_candidate_pairs` semantics); a bucket at
-    band k expands a member pair only when the two members agree on NO
-    band j < k. For any pair, the set of shared bands is fixed and
-    non-empty iff the pair is a candidate, so exactly one band — the
-    minimum — emits it: the stream is globally duplicate-free by
-    construction and the output-sized ``distinct()`` shuffle of the
-    classic pipeline (measured at sf0.1: 23.4M exploded rows partially
-    deduped into a 59 MB / 12.2M-record exchange, re-aggregated into
-    10.5M pairs — the single largest stage of every MinHash query)
-    disappears outright; only bucket rows (thousands) ever shuffle.
-    Skew-proofing is unchanged: small buckets expand in place, oversized
-    buckets go through the same blocked + round-robin path as
-    :func:`expand_sorted_array_pairs`.
+    the doc's band-hash vector, ``n_bands`` long. Per band, docs sharing
+    the band's hash form a bucket; a bucket at band k expands a member
+    pair only when the two members agree on NO band j < k. For any pair,
+    the set of shared bands is fixed and non-empty iff the pair is a
+    candidate, so exactly one band — the minimum — emits it: the stream
+    is globally duplicate-free by construction. Exploding every bucket
+    and de-duplicating instead costs an output-sized ``distinct()``
+    shuffle (measured at sf0.1: 23.4M exploded rows partially deduped
+    into a 59 MB / 12.2M-record exchange, re-aggregated into 10.5M pairs
+    — once the single largest stage of every MinHash query); here only
+    bucket rows (thousands) ever shuffle. Buckets expand through
+    :func:`expand_sorted_array_pairs`' skew-proof split: small buckets
+    in place, oversized ones blocked + round-robin.
 
     The min-shared-band test is generated as a SCALAR or-chain over the
     member struct's prior-band fields — never slice/zip_with array ops,
     which allocate per candidate pair and measured 5× slower than the
-    whole classic distinct() they were replacing.
-
-    ``max_bucket_size`` drops oversized buckets like
-    :func:`lsh_candidate_pairs`, but NOTE the semantics differ from the
-    classic path: a pair whose MINIMUM shared band was dropped is not
-    re-emitted by a later shared band (the freshness test compares raw
-    band hashes, not bucket survival). Callers that rely on the classic
-    "pairs may re-surface through other bands" behavior must keep
-    :func:`lsh_candidate_pairs`.
+    whole distinct() they were replacing.
     """
-    if n_bands is None:
-        raise ValueError("pass n_bands (static band count)")
     # Member struct: id plus the doc's band hashes for every band that
     # can ever be a PRIOR band (0..n_bands-2). sort_array orders by the
-    # leading field, so member arrays are id-sorted like the classic
-    # path's sorted id arrays.
+    # leading field, so member arrays are id-sorted.
     member = F.struct(
         F.col(id_col).alias("id"),
         *[F.col("__bhs")[j].alias(f"h{j}") for j in range(max(n_bands - 1, 0))],
@@ -356,8 +279,6 @@ def banded_unique_pairs(
         .agg(F.sort_array(F.collect_set("__m")).alias("__mem"))
         .filter(F.size("__mem") >= 2)
     )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("__mem") <= max_bucket_size)
     k = F.col("band_idx")
 
     def _stale(a, b):
@@ -380,14 +301,14 @@ def banded_unique_pairs(
         # Staleness runs as a TOP-LEVEL filter, not inside the array
         # lambda: higher-order lambdas are interpreted (no codegen), so
         # per-candidate struct work there measured 5-9× slower than the
-        # classic distinct() it replaces; as a codegen Filter over plain
+        # distinct() it replaces; as a codegen Filter over plain
         # struct-field reads it is a few compiled comparisons per row.
         return pairs.where(~_stale(F.col("a"), F.col("b"))).select(
             F.col("a")["id"].alias("id_a"), F.col("b")["id"].alias("id_b")
         )
 
     small, big = _expand_sorted(
-        buckets, "__mem", block_size, "a", "b", lambda m: m["id"], k
+        buckets, "__mem", "a", "b", lambda m: m["id"], k
     )
     return fresh(small).unionByName(fresh(big))
 
@@ -475,7 +396,6 @@ def near_dup_pairs(
     num_perm: int = 8,
     rows_per_band: int = 2,
     threshold: float = 0.6,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Full MinHash→LSH→verify near-dup pipeline: pairs with Jaccard ≥ t.
 
@@ -484,8 +404,8 @@ def near_dup_pairs(
     so exact duplicates are collapsed first (one md5 groupBy) and each
     verified *text* pair expands back to document pairs at the end. On a
     dup-heavy corpus this shrinks the LSH working set by the duplication
-    factor and removes the biggest shuffle entirely — the distinct() over
-    candidate *doc* pairs becomes a distinct over candidate *text* pairs.
+    factor: bucket expansion and verification run over candidate *text*
+    pairs, not candidate *doc* pairs.
     Semantics are unchanged and oracle-checked: docs of one text share all
     band hashes (same signature → always candidates, Jaccard exactly 1.0),
     and a cross-text doc pair is a candidate iff its rep pair is, with the
@@ -500,26 +420,13 @@ def near_dup_pairs(
     groups, reps = _text_reps(df, text_col, id_col)
 
     sigs = minhash_signatures(reps, text_col, id_col, num_perm)
-    if max_bucket_size is None:
-        # Round-11 optimization: generate each candidate pair exactly
-        # once (at its minimum shared band) instead of exploding every
-        # band's bucket and distinct()-ing — same band hashes, same
-        # candidate SET, but the biggest exchange of the pipeline (the
-        # pair-level distinct) vanishes; see banded_unique_pairs.
-        bands_all = sigs.select(
-            F.col(id_col),
-            F.array(*_band_hashes(num_perm, rows_per_band)).alias("__bhs"),
-        )
-        cands = banded_unique_pairs(bands_all, id_col, n_bands=n_bands)
-    else:
-        # The bucket-size cap's documented semantics ("drop the bucket,
-        # pairs may re-surface through other bands") need the classic
-        # explode+distinct path — min-shared-band emission would skip
-        # pairs whose minimum band was dropped.
-        bands = lsh_bands(sigs, id_col, num_perm, rows_per_band)
-        cands = lsh_candidate_pairs(
-            bands, id_col, max_bucket_size=max_bucket_size
-        )
+    # Each candidate pair comes out once, at its minimum shared band, so
+    # no pair-level distinct() exchange runs; see banded_unique_pairs.
+    bands_all = sigs.select(
+        F.col(id_col),
+        F.array(*_band_hashes(num_perm, rows_per_band)).alias("__bhs"),
+    )
+    cands = banded_unique_pairs(bands_all, id_col, n_bands=n_bands)
     rep_jac = jaccard_pairs(reps, cands, text_col, id_col).filter(
         F.col("jaccard") >= threshold
     )
@@ -642,7 +549,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.2,
-    max_posting_list: int | None = None,
     reuse_shingles: bool = False,
     strategy: str = "index",
     max_reps: int = 1 << 20,
@@ -652,7 +558,7 @@ def ngram_jaccard_pairs(
     Only pairs sharing ≥1 shingle are scored (the join IS the candidate
     generation — all-pairs never materializes); |A∪B| from per-doc shingle
     counts. At 100 TB, stop-shingles (shared by many docs) dominate the
-    join fan-out — cap posting-list length or fall back to MinHash banding.
+    join fan-out — fall back to MinHash banding (:func:`near_dup_pairs`).
 
     Like :func:`near_dup_pairs`, the quadratic stage runs per DISTINCT
     TEXT: shingle sets are a pure function of the text, so exact
@@ -763,25 +669,8 @@ def ngram_jaccard_pairs(
         # memory-and-disk blocks, the standard reuse of a shared stage.
         sh = sh.localCheckpoint(eager=False)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sh_joinable = sh
-    if max_posting_list is not None:
-        # Stop-shingle guardrail (the cap the docstring promises): a
-        # shingle appearing in P docs contributes P² rows to the
-        # inverted-index join — boilerplate shingles dominate fan-out at
-        # corpus scale while contributing little discriminative signal.
-        # Shingles above the cap are excluded from CANDIDATE GENERATION
-        # AND the intersection counts, but |A|/|B| stay exact, so reported
-        # Jaccard is a lower bound (recall-oriented approximation). OFF by
-        # default — the oracle-checked semantics require every shingle.
-        hot = (
-            sh.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("__p"))
-            .filter(F.col("__p") > max_posting_list)
-            .select("s")
-        )
-        sh_joinable = sh.join(hot, "s", "left_anti")
     rep_jac = (
-        _shingle_overlaps(sh_joinable, sizes, id_col)
+        _shingle_overlaps(sh, sizes, id_col)
         .select(
             "id_a",
             "id_b",
@@ -1300,8 +1189,6 @@ def simhash_pairs(
     bits: int = 32,
     n_bands: int = 4,
     max_hamming: int = 3,
-    block_size: int = 256,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: (id_a, id_b, hamming ≤ ``max_hamming``).
 
@@ -1316,15 +1203,15 @@ def simhash_pairs(
     Requires ``max_hamming < n_bands`` (the pigeonhole precondition) and
     ``bits % n_bands == 0``.
 
-    Scale shape: candidate generation reuses the skew-proof bucketed
-    expansion of the MinHash path (:func:`lsh_candidate_pairs` —
-    per-bucket arrays, blocked expansion for degenerate buckets), the
-    fingerprint table re-joins candidates id-keyed, and verification is
-    one JVM integer op per candidate. Total: the fingerprint aggregation
-    + one bucket shuffle + one distinct over candidates — no all-pairs
-    stage anywhere. With b bits the band value domain is 2^(b/n_bands);
-    at 100 TB raise ``bits`` (wider fingerprints = fewer spurious band
-    collisions) rather than lowering bands.
+    Scale shape: candidates come from the MinHash path's generator
+    (:func:`banded_unique_pairs` — per-bucket arrays, blocked expansion
+    for degenerate buckets, each pair once at its minimum shared band),
+    the fingerprint table re-joins candidates id-keyed, and verification
+    is one JVM integer op per candidate. Total: the fingerprint
+    aggregation + one bucket shuffle — no all-pairs stage and no
+    pair-level distinct anywhere. With b bits the band value domain is
+    2^(b/n_bands); at 100 TB raise ``bits`` (wider fingerprints = fewer
+    spurious band collisions) rather than lowering bands.
     """
     if max_hamming >= n_bands:
         raise ValueError("pigeonhole guarantee needs d < n_bands")
@@ -1341,31 +1228,10 @@ def simhash_pairs(
         )
         for b in range(n_bands)
     ]
-    if max_bucket_size is None:
-        # Round-11: min-shared-band unique pair generation — same
-        # candidate set, no pair-level distinct() exchange (see
-        # banded_unique_pairs; the near_dup_pairs rationale applies
-        # verbatim, and SimHash band values are already positional).
-        bands_all = fp.select(
-            F.col(id_col), F.array(*band_exprs).alias("__bhs")
-        )
-        cands = banded_unique_pairs(
-            bands_all, id_col, n_bands=n_bands, block_size=block_size
-        )
-    else:
-        band_structs = [
-            F.struct(F.lit(b).alias("band_idx"), e.alias("band_hash"))
-            for b, e in enumerate(band_exprs)
-        ]
-        bands = fp.select(
-            F.col(id_col), F.explode(F.array(*band_structs)).alias("band")
-        ).select(id_col, "band.band_idx", "band.band_hash")
-        cands = lsh_candidate_pairs(
-            bands,
-            id_col,
-            block_size=block_size,
-            max_bucket_size=max_bucket_size,
-        )
+    # SimHash band values are already positional, so they feed
+    # banded_unique_pairs as they are.
+    bands_all = fp.select(F.col(id_col), F.array(*band_exprs).alias("__bhs"))
+    cands = banded_unique_pairs(bands_all, id_col, n_bands=n_bands)
     a = fp.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("__sa"))
     b = fp.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("__sb"))
     return (
@@ -1479,8 +1345,6 @@ def blocked_edit_distance_pairs(
     text_col: str,
     id_col: str = "doc_id",
     max_distance: int = 3,
-    block_size: int = 256,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Record linkage / entity resolution: candidate pairs from equality
     BLOCKING on ``block_cols``, verified by Levenshtein edit distance on
@@ -1489,20 +1353,21 @@ def blocked_edit_distance_pairs(
     character-level typos.
 
     Output: (id_a, id_b, dist ≤ ``max_distance``). Blocking IS the scale
-    technique — the quadratic verify runs per block, never corpus-wide —
-    and candidate generation reuses the skew-proof bucketed expansion of
-    the LSH path (:func:`lsh_candidate_pairs`), so one hot block cannot
-    pin a core. Levenshtein is a JVM built-in on both engines; at 100 TB
-    pick block keys so blocks stay ≪ ``max_bucket_size`` (e.g. add a
-    phonetic or prefix key), exactly as in production linkage systems.
+    technique — the quadratic verify runs per block, never corpus-wide.
+    Candidates come from the LSH path's generator with one band, the
+    block-key hash (:func:`banded_unique_pairs`): a row sits in exactly
+    one block, so each pair comes out once with no distinct, and one hot
+    block is spread over every core instead of pinning one. Levenshtein
+    is a JVM built-in on both engines; at 100 TB pick block keys so
+    blocks stay small (e.g. add a phonetic or prefix key), exactly as in
+    production linkage systems: a block of B rows still costs B²/2
+    verifications.
     """
-    bands = df.select(
-        F.col(id_col),
-        F.lit(0).alias("band_idx"),
-        F.xxhash64(*[F.col(c) for c in block_cols]).alias("band_hash"),
-    )
-    cands = lsh_candidate_pairs(
-        bands, id_col, block_size=block_size, max_bucket_size=max_bucket_size
+    block = F.xxhash64(*[F.col(c) for c in block_cols])
+    cands = banded_unique_pairs(
+        df.select(F.col(id_col), F.array(block).alias("__bhs")),
+        id_col,
+        n_bands=1,
     )
     a = df.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("__ta"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("__tb"))

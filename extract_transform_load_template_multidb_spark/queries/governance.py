@@ -2054,8 +2054,8 @@ def dq_duplicate_payment_detector(
     key — the date window is a residual filter, never a join condition
     — so pair volume is Σ block_size², bounded by how often one
     customer repeats one price band, not |orders|²; the orderkey
-    ordering canonicalizes each pair once. At skewed scale, cap or
-    salt oversized blocks exactly as the dedup pair-generators do;
+    ordering canonicalizes each pair once. At skewed scale, split
+    oversized blocks exactly as the dedup pair generators do;
     boundary-straddling near-amounts need the two-bucket probe the
     LSH band joins use."""
     o = load_table(spark, sf_dir, "orders").select(

@@ -1490,12 +1490,12 @@ LIMIT 100
 @query("text_top_ngrams", oracle=_TOP_NGRAMS_ORACLE)
 def text_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 3-gram shingles by document frequency — the corpus stat
-    that feeds stop-shingle caps (``max_posting_list`` /
-    ``max_bucket_size``) in the dedup family: shingles shared by
+    that flags stop-shingles before a dedup run: shingles shared by
     thousands of documents carry no dedup signal but dominate
-    inverted-index fan-out. Deterministic (doc_freq desc, shingle asc)
-    total order; plans as partial+final count then
-    TakeOrderedAndProject — never a global sort."""
+    inverted-index fan-out (the cue to use MinHash banding instead).
+    Deterministic (doc_freq desc, shingle asc) total order; plans as
+    partial+final count then TakeOrderedAndProject — never a global
+    sort."""
     doc = load_table(spark, sf_dir, "documents")
     # Materialize the token array BEFORE shingling: word_shingles
     # references its token input 2+3n times and Spark does not CSE across
@@ -2324,9 +2324,9 @@ def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     config so the oracle can unroll the signature min-hashes). The
     operator a 100 TB dedup run checks BEFORE paying the pair expansion:
     a fat bucket tail means stop-shingle pollution and quadratic blowup
-    (cap via max_bucket_size); a flat distribution means the bands are
-    discriminating. Two map-side-combinable counts — no pairs ever
-    form."""
+    (more rows per band, or cleaner text, before expanding); a flat
+    distribution means the bands are discriminating. Two
+    map-side-combinable counts — no pairs ever form."""
     docs = load_table(spark, sf_dir, "documents")
     reps = docs.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     sigs = dd.minhash_signatures(reps, "text", "doc_id", num_perm=4)
@@ -4555,7 +4555,8 @@ def dedup_shingle_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entropy of the shingle document-frequency distribution — the
     one-number health check of the dedup index: LOW entropy means a few
     stop-shingles dominate the posting lists (pair expansion will
-    explode; raise the caps), high entropy means the index discriminates.
+    explode; use MinHash banding), high entropy means the index
+    discriminates.
     Quantized-ln × integer-df decimal sums over the same shingle CTE the
     pair path uses."""
     from extract_transform_load_template_multidb_spark.operators.dedup import (
@@ -8825,13 +8826,13 @@ def graph_bipartite_projection(
     Pair generation is the per-customer self-join of the DISTINCT edge
     list — fanout is each customer's supplier-degree (≈ order count),
     so pair volume is Σ deg(c)² over customers, NOT |S|²; at skewed
-    scale, cap per-customer degree (drop-and-log whales) exactly as the
-    LSH bucket caps do. The codegen self-join beats the basket-array
-    combination fold here BECAUSE degrees are ~25-30: a deg² array of
-    structs per customer row evaluates interpreted (measured 2.3 s →
-    6.9 s when tried), while ≤7-part order baskets favor the fold —
-    pick by group fan-out. Degrees broadcast back onto the pair
-    aggregate; top-25 is a TakeOrdered, never a global sort."""
+    scale, cap per-customer degree (drop-and-log whales). The codegen
+    self-join beats the basket-array combination fold here BECAUSE
+    degrees are ~25-30: a deg² array of structs per customer row
+    evaluates interpreted (measured 2.3 s → 6.9 s when tried), while
+    ≤7-part order baskets favor the fold — pick by group fan-out.
+    Degrees broadcast back onto the pair aggregate; top-25 is a
+    TakeOrdered, never a global sort."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     el = (

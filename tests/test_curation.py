@@ -167,8 +167,10 @@ def test_connected_components_chain_and_cliques(spark, cc_kwargs):
                      id="mixture_sample"),
         pytest.param(lambda df: layout.z_value([F.col("doc_id")] * 4, 16),
                      id="z_value"),
-        pytest.param(lambda df: dd.lsh_bands(df, num_perm=8, rows_per_band=3),
-                     id="lsh_bands"),
+        pytest.param(
+            lambda df: dd.near_dup_pairs(df, num_perm=8, rows_per_band=3),
+            id="near_dup_pairs",
+        ),
         pytest.param(lambda df: dd.simhash(df, bits=33), id="simhash"),
         pytest.param(
             lambda df: dd.simhash_pairs(df, n_bands=4, max_hamming=4),

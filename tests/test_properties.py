@@ -9,6 +9,7 @@ Python reference, and upsert idempotency over random key collisions.
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 import re
 
 import pytest
@@ -324,7 +325,6 @@ def test_cc_star_label_local_agree(spark, edges):
 def test_triangle_stats_match_bruteforce(spark, pairs):
     """Degree-ordered distributed triangle counting equals a brute-force
     itertools census on random graphs (count is orientation-invariant)."""
-    import itertools
 
     from extract_transform_load_template_multidb_spark.operators import (
         graph as G,
@@ -870,20 +870,20 @@ def test_ngram_jaccard_allpairs_equals_index(spark, texts, n, threshold):
 )
 @settings(**_SETTINGS)
 def test_banded_unique_pairs_equals_classic(spark, rows):
-    """banded_unique_pairs (round-11: min-shared-band emission, no
-    distinct() exchange) emits exactly the classic bucket-expansion pair
-    set, each pair exactly once — tiny band-value domain on purpose so
-    buckets collide maximally, including identical buckets across bands
-    and cross-band hash-value reuse."""
+    """banded_unique_pairs (min-shared-band emission, no distinct()
+    exchange) emits exactly the classic candidate set — every (a < b)
+    whose band vectors are equal at some position — each pair exactly
+    once. Tiny band-value domain on purpose so buckets collide maximally,
+    including identical buckets across bands and cross-band hash-value
+    reuse."""
     bands_all = spark.createDataFrame(
         [(i, [int(h) for h in hs]) for i, hs in rows],
         "doc_id long, __bhs array<long>",
     )
-    bands = bands_all.select(
-        "doc_id", F.posexplode("__bhs").alias("band_idx", "band_hash")
-    )
     classic = {
-        tuple(r) for r in dd.lsh_candidate_pairs(bands, "doc_id").collect()
+        (min(i, j), max(i, j))
+        for (i, hi), (j, hj) in itertools.combinations(rows, 2)
+        if any(x == y for x, y in zip(hi, hj))
     }
     uniq = [
         tuple(r)

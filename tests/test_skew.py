@@ -70,57 +70,60 @@ def test_salt_is_deterministic(spark):
     assert df.select(F.max("s1"), F.min("s1")).collect()[0] == (7, 0)
 
 
-def test_lsh_bucket_cap_is_subset(spark, sf_dir):
-    """With a bucket cap, candidate pairs are a subset of the uncapped set
-    (recall-oriented approximation, never new pairs)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from extract_transform_load_template_multidb_spark.operators import (
-        dedup as dd,
-    )
-
-    doc = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    full = {
-        (r["id_a"], r["id_b"])
-        for r in dd.near_dup_pairs(doc, threshold=0.5)
-        .select("id_a", "id_b")
-        .collect()
-    }
-    capped = {
-        (r["id_a"], r["id_b"])
-        for r in dd.near_dup_pairs(doc, threshold=0.5, max_bucket_size=8)
-        .select("id_a", "id_b")
-        .collect()
-    }
-    assert capped <= full
-    assert len(capped) < len(full)  # the fixture HAS oversized buckets
+def _levenshtein(x: str, y: str) -> int:
+    prev = list(range(len(y) + 1))
+    for i, cx in enumerate(x, 1):
+        cur = [i]
+        for j, cy in enumerate(y, 1):
+            cur.append(
+                min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (cx != cy))
+            )
+        prev = cur
+    return prev[-1]
 
 
-def test_ngram_posting_cap_lowers_jaccard_only(spark, sf_dir):
-    """Stop-shingle cap: reported Jaccard is a lower bound of the exact
-    value and no new pairs appear."""
-    import os
+def test_blocked_edit_distance_pairs_matches_bruteforce(spark):
+    """Linkage pairs equal a Python double loop over every same-block
+    pair, each pair once. One block is larger than ``BLOCK_SIZE``, so
+    its pairs go through the blocked + round-robin expansion; other
+    blocks reuse its key values in different combinations, and a row
+    with a null id pairs with nothing (as in the SQL self-join)."""
+    import random
 
     from extract_transform_load_template_multidb_spark.operators import (
         dedup as dd,
     )
 
-    doc = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    exact = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dd.ngram_jaccard_pairs(doc, threshold=0.05).collect()
-    }
-    capped = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dd.ngram_jaccard_pairs(
-            doc, threshold=0.05, max_posting_list=3
+    rng = random.Random(7)
+
+    def name():
+        return "".join(rng.choice("abc") for _ in range(5))
+
+    big = dd.BLOCK_SIZE + 44
+    rows = [(i, "b1", 1, name()) for i in range(big)]
+    rows += [(1000 + i, "b1", 2, name()) for i in range(6)]
+    rows += [(2000 + i, "b2", 1, name()) for i in range(6)]
+    rows += [(3000, "b3", 3, name()), (None, "b1", 1, rows[0][3])]
+    df = spark.createDataFrame(
+        rows, "id bigint, brand string, grp int, name string"
+    )
+    got = [
+        tuple(r)
+        for r in dd.blocked_edit_distance_pairs(
+            df, ("brand", "grp"), "name", id_col="id", max_distance=2
         ).collect()
-    }
-    assert set(capped) <= set(exact)
-    for pair, j in capped.items():
-        assert j <= exact[pair] + 1e-12
+    ]
+    want = set()
+    for ia, ba, ga, na in rows:
+        for ib, bb, gb, nb in rows:
+            if ia is None or ib is None or ia >= ib or (ba, ga) != (bb, gb):
+                continue
+            d = _levenshtein(na, nb)
+            if d <= 2:
+                want.add((ia, ib, d))
+    assert len(got) == len(set(got))  # each pair exactly once
+    assert set(got) == want
+    assert any(a < dd.BLOCK_SIZE < b for a, b, _ in want)  # cross-slice
 
 
 def test_near_dup_empty_text_copies_never_pair(spark):
